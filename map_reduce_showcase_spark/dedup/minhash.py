@@ -27,7 +27,7 @@ the same high-DF-cap defense as the shingle index.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import portable_hash60
@@ -67,9 +67,7 @@ def hashed_shingle_rows(
     )
 
 
-def minhash_signatures(
-    sh: DataFrame, num_hashes: int = 12, with_shingles: bool = False
-) -> DataFrame:
+def minhash_signatures(sh: DataFrame, num_hashes: int = 12) -> DataFrame:
     """Wide signature frame: (doc_id, mh0..mh{k-1}, sz) from
     (doc_id, k) hashed-shingle rows. One hash-aggregate; k mins
     computed map-side, so the shuffle carries k longs per
@@ -80,11 +78,7 @@ def minhash_signatures(
     via ``shingle_sizes`` would re-scan and re-shuffle the whole
     shingle frame — partial aggregation sits below the exchange, so
     Spark cannot reuse the signature groupBy's shuffle for a second
-    aggregation over the same key. With ``with_shingles`` the doc's
-    full shingle-hash ARRAY (``ks``) rides it too, for the
-    array-intersection verify (r18): the r17 plan re-aggregated this
-    frame once per downstream reference — both band-join sides and
-    both size joins, four passes over the shingle rows."""
+    aggregation over the same key."""
     # one parsed SQL string per aggregate instead of ~6 Column-API
     # calls each (the simhash r17 trick): identical plan, ~70 fewer
     # py4j round trips per build
@@ -95,8 +89,6 @@ def minhash_signatures(
             F.expr(f"min((({a} * (k % {MOD})) + {b}) % {MOD}) AS mh{i}")
         )
     aggs.append(F.count(F.lit(1)).alias("sz"))
-    if with_shingles:
-        aggs.append(F.collect_list("k").alias("ks"))
     return sh.groupBy("doc_id").agg(*aggs)
 
 
@@ -129,7 +121,7 @@ def band_rows(
     )
 
 
-def _first_band_match() -> "F.Column":
+def first_band_match() -> Column:
     """True iff no band BEFORE the joined one also matched — the
     exactly-once emission filter for banded candidate joins. ONE
     parsed expression: the Column-API lambda form of the same tree
@@ -156,7 +148,7 @@ def lsh_candidate_pairs(
             & (F.col("a.bkey") == F.col("b.bkey"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .filter(_first_band_match())
+        .filter(first_band_match())
         .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
     )
 
@@ -256,7 +248,7 @@ def incremental_minhash_near_dup_pairs(
             & (F.col("a.doc_id") != F.col("b.doc_id")),
         )
         .filter(once)
-        .filter(_first_band_match())
+        .filter(first_band_match())
         .select(
             F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("d1"),
             F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("d2"),

@@ -1,11 +1,13 @@
 """Text-analysis column expressions — all native Catalyst expressions.
 
-Everything here is a ``Column``-in → ``Column``-out builder using only
-built-in ``pyspark.sql.functions`` (JVM-side, whole-stage-codegen'd);
-no Python UDFs in any hot path. The reference's text surface was
-lowercase + split (``src/app/wc.rs:13-18``); this module adds what a
-training-data pipeline needs: token stats, quality signals, language
-ID, shingles, fingerprints, and a portable 60-bit hash.
+The text helpers take SQL text (a column name or fragment) and return
+a ``Column``; only :func:`top_token_count` and :func:`portable_hash60`
+take a ``Column``. Everything is a built-in Spark expression
+(JVM-side, whole-stage-codegen'd); no Python UDFs in any hot path.
+The reference's text surface was lowercase + split
+(``src/app/wc.rs:13-18``); this module adds what a training-data
+pipeline needs: token stats, quality signals, language ID, shingles,
+fingerprints, and a portable 60-bit hash.
 """
 
 from __future__ import annotations
@@ -14,8 +16,12 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: Tokens = maximal runs of letters/digits (BPE-ish pre-tokenization
-#: boundary); keep in sync with the DuckDB oracle regexes.
+#: boundary); keep in sync with the DuckDB oracle regexes. Every
+#: regex here reaches Spark as a SQL string literal through
+#: :func:`_sql_regex`, the one place its backslashes are doubled.
 TOKEN_SPLIT = r"[^\p{L}\p{N}]+"
+#: What :func:`punct_ratio` strips: letters, digits, whitespace.
+WORD_OR_SPACE = r"[\p{L}\p{N}\s]"
 
 #: Tiny per-language marker lexicons for the n-gram/stopword
 #: language-ID heuristic. Deterministic and SQL-portable.
@@ -29,48 +35,42 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 STOPWORDS: tuple[str, ...] = ("the", "a", "of", "and", "to", "in", "is", "it")
 
 
+def _sql_regex(pattern: str) -> str:
+    """``pattern`` as a SQL string literal. The SQL parser unescapes
+    literals (``spark.sql.parser.escapedStringLiterals=false``, pinned
+    by ``session.get_spark``), so each backslash is doubled."""
+    return "'" + pattern.replace("\\", "\\\\") + "'"
+
+
 def tokens_sql(text: str) -> str:
-    """:func:`tokens` as SQL text over a column-name fragment — ONE
-    parsed expression instead of a py4j-built lambda tree (~20 ms of
-    driver round trips per build; r18 build profile). The regex
-    backslashes are doubled because the SQL parser unescapes string
-    literals, where the Column API passes the pattern through
-    verbatim."""
-    pattern = TOKEN_SPLIT.replace("\\", "\\\\")
-    return f"filter(split(lower({text}), '{pattern}'), t -> length(t) > 0)"
+    """:func:`tokens` as SQL text, for embedding into larger
+    single-parse expressions."""
+    return f"filter(split(lower({text}), {_sql_regex(TOKEN_SPLIT)}), t -> length(t) > 0)"
 
 
-def tokens(text: Column | str) -> Column:
-    """Lowercase letter/digit tokens, empties dropped. Accepts a
-    Column, or SQL text (a column name) for the one-parse path."""
-    if isinstance(text, str):
-        return F.expr(tokens_sql(text))
-    return F.filter(F.split(F.lower(text), TOKEN_SPLIT), lambda t: F.length(t) > 0)
+def tokens(text: str) -> Column:
+    """Lowercase letter/digit tokens of ``text`` (SQL text: a column
+    name or fragment), empties dropped. ONE parsed expression: the
+    Column-API lambda form of the same tree costs ~20 ms of py4j
+    round trips per lambda to build."""
+    return F.expr(tokens_sql(text))
 
 
-def token_count(text: Column | str) -> Column:
+def token_count(text: str) -> Column:
     return F.size(tokens(text))
 
 
 def _punct_ratio_sql(text: str) -> str:
-    pattern = r"[\p{L}\p{N}\s]".replace("\\", "\\\\")
     return (
-        f"(CAST(length(regexp_replace({text}, '{pattern}', '')) AS DOUBLE)"
+        f"(CAST(length(regexp_replace({text}, {_sql_regex(WORD_OR_SPACE)}, '')) AS DOUBLE)"
         f" / CAST(greatest(length({text}), 1) AS DOUBLE))"
     )
 
 
-def punct_ratio(text: Column | str) -> Column:
+def punct_ratio(text: str) -> Column:
     """Fraction of characters that are not letter/digit/whitespace —
-    a classic boilerplate/garbage signal. SQL-text inputs take the
-    one-parse path (r18 build profile: lambda construction costs
-    ~20 ms of py4j round trips each)."""
-    if isinstance(text, str):
-        return F.expr(_punct_ratio_sql(text))
-    stripped = F.regexp_replace(text, r"[\p{L}\p{N}\s]", "")
-    return F.length(stripped).cast("double") / F.greatest(F.length(text), F.lit(1)).cast(
-        "double"
-    )
+    a classic boilerplate/garbage signal."""
+    return F.expr(_punct_ratio_sql(text))
 
 
 def _stopword_ratio_sql(text: str) -> str:
@@ -82,41 +82,22 @@ def _stopword_ratio_sql(text: str) -> str:
     )
 
 
-def stopword_ratio(text: Column | str) -> Column:
+def stopword_ratio(text: str) -> Column:
     """Fraction of tokens that are stopwords — low values flag
     keyword-stuffed or non-linguistic text."""
-    if isinstance(text, str):
-        return F.expr(_stopword_ratio_sql(text))
-    toks = tokens(text)
-    hits = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
-    return hits.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
+    return F.expr(_stopword_ratio_sql(text))
 
 
-def quality_score(text: Column | str) -> Column:
+def quality_score(text: str) -> Column:
     """Deterministic [0,1] quality heuristic: length band + stopword
     presence − punctuation noise. A stand-in for model-based quality
     classifiers; the *shape* (pure column expr, no UDF) is the point:
     it runs at scan speed over 100 TB."""
-    if isinstance(text, str):
-        return F.expr(
-            f"round(greatest(least("
-            f"(0.5D * least(CAST(size({tokens_sql(text)}) AS DOUBLE) / 64.0D, 1.0D))"
-            f" + (0.5D * {_stopword_ratio_sql(text)})"
-            f" - {_punct_ratio_sql(text)}, 1.0D), 0.0D), 6)"
-        )
-    n = token_count(text).cast("double")
-    length_component = F.least(n / F.lit(64.0), F.lit(1.0))
-    return F.round(
-        F.greatest(
-            F.least(
-                F.lit(0.5) * length_component
-                + F.lit(0.5) * stopword_ratio(text)
-                - punct_ratio(text),
-                F.lit(1.0),
-            ),
-            F.lit(0.0),
-        ),
-        6,
+    return F.expr(
+        f"round(greatest(least("
+        f"(0.5D * least(CAST(size({tokens_sql(text)}) AS DOUBLE) / 64.0D, 1.0D))"
+        f" + (0.5D * {_stopword_ratio_sql(text)})"
+        f" - {_punct_ratio_sql(text)}, 1.0D), 0.0D), 6)"
     )
 
 
@@ -124,14 +105,14 @@ def quality_score(text: Column | str) -> Column:
 LANG_PRECEDENCE: tuple[str, ...] = ("en", "de", "es", "fr")
 
 
-def lang_marker_score(text: Column, lang: str) -> Column:
+def lang_marker_score(text: str, lang: str) -> Column:
     """Count of marker-lexicon token hits for one language."""
     return F.size(
         F.filter(tokens(text), lambda t: t.isin(*LANG_MARKERS[lang]))
     )
 
 
-def language_id(text: Column) -> Column:
+def language_id(text: str) -> Column:
     """Marker-lexicon language ID: count marker-token hits per
     language; the argmax is an explicit CASE chain in
     :data:`LANG_PRECEDENCE` order (ties → earlier language), no hits
@@ -183,7 +164,7 @@ def top_token_count(toks: Column) -> Column:
     return F.when(F.size(toks) > 0, folded)
 
 
-def ngrams(text: Column, n: int) -> Column:
+def ngrams(text: str, n: int) -> Column:
     """Array of space-joined word n-grams; empty when < n tokens."""
     toks = tokens(text)
     idx = F.sequence(F.lit(0), F.size(toks) - n)
@@ -193,7 +174,7 @@ def ngrams(text: Column, n: int) -> Column:
     )
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
+def word_shingles(text: str, n: int = 3) -> Column:
     """Distinct word n-gram shingles — the MinHash/Jaccard unit."""
     return F.array_distinct(ngrams(text, n))
 
@@ -216,7 +197,7 @@ def portable_hash60_sql(expr: str) -> str:
     return f"CAST(concat('0x', substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
-def fingerprint(text: Column) -> Column:
+def fingerprint(text: str) -> Column:
     """Document fingerprint: md5 of whitespace-normalized lowercase
     text — the exact-dedup key that survives formatting noise."""
     normalized = F.concat_ws(" ", tokens(text))

@@ -445,7 +445,7 @@ def dedup_apply_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import tokens as _tokens
 
     docs = t(spark, sf_dir, "documents")
-    fp = F.md5(F.concat_ws(" ", _tokens(F.col("text"))))
+    fp = F.md5(F.concat_ws(" ", _tokens("text")))
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("fp")

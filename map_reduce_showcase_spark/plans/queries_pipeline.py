@@ -105,8 +105,7 @@ def pipeline_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpivoted driver-side-free via ``stack``."""
     from ..functions import text as T
 
-    txt = F.col("text")
-    toks = T.tokens(txt)
+    toks = T.tokens("text")
     n = F.size(toks)
     safe_n = F.greatest(n, F.lit(1)).cast("double")
     ndist = F.size(F.array_distinct(toks))
@@ -127,8 +126,8 @@ def pipeline_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (dup_bigram <= 0.75)
     )
 
-    s1 = T.language_id(txt) != "und"
-    s2 = s1 & (T.quality_score(txt) >= 0.25)
+    s1 = T.language_id("text") != "und"
+    s2 = s1 & (T.quality_score("text") >= 0.25)
     s3 = s2 & keep_rep
 
     from pyspark.sql.window import Window
@@ -503,7 +502,7 @@ def sample_weighted_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import quality_score
 
     docs = t(spark, sf_dir, "documents")
-    q = quality_score(F.col("text"))
+    q = quality_score("text")
     u = (portable_hash60(F.col("doc_id").cast("string")) + F.lit(1)) / F.lit(
         float(1 << 60)
     )
@@ -619,7 +618,7 @@ def pipeline_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
     )
     marked = docs.select(
-        split.alias("split"), fingerprint(F.col("text")).alias("fp")
+        split.alias("split"), fingerprint("text").alias("fp")
     )
     train_fps = (
         marked.filter(F.col("split") == "train").select("fp").distinct()
@@ -667,7 +666,7 @@ def quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import text as T
 
     docs = t(spark, sf_dir, "documents").select(
-        T.quality_score(F.col("text")).alias("q"), "n_chars"
+        T.quality_score("text").alias("q"), "n_chars"
     )
     swept = docs.select(
         "q", "n_chars", F.explode(F.array([F.lit(v) for v in (0.2, 0.4, 0.6, 0.8)])).alias("thr")
@@ -737,7 +736,7 @@ def pipeline_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         portable_hash60(F.concat(F.lit("edit#"), F.col("doc_id").cast("string"))) % 7
         == 0
     )
-    fp = fingerprint(F.col("text"))
+    fp = fingerprint("text")
     v1 = docs.filter(snap < 90).select(
         F.col("doc_id").alias("id1"), fp.alias("fp1")
     )

@@ -247,7 +247,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # time — builders must stay lazy plans)
     nd = docs.agg(F.count(F.lit(1)).alias("_nd"))
     terms = docs.select(
-        "doc_id", F.explode(T.tokens(F.col("text"))).alias("word")
+        "doc_id", F.explode(T.tokens("text")).alias("word")
     )
     tf = terms.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
     df_ = terms.distinct().groupBy("word").agg(F.count(F.lit(1)).alias("df"))

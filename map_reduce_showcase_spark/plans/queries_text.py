@@ -66,7 +66,7 @@ def _lang_case_sql() -> str:
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token counts (whitespace/punct tokenizer) —
     the unit-economics column every corpus pipeline needs."""
-    toks = T.tokens(F.col("text"))
+    toks = T.tokens("text")
     return t(spark, sf_dir, "documents").select(
         "doc_id",
         F.size(toks).cast("int").alias("n_tokens"),
@@ -132,7 +132,7 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the heuristic's behavior — not its accuracy — is under test."""
     docs = t(spark, sf_dir, "documents")
     return (
-        docs.select(F.col("lang").alias("labeled_lang"), T.language_id(F.col("text")).alias("pred_lang"))
+        docs.select(F.col("lang").alias("labeled_lang"), T.language_id("text").alias("pred_lang"))
         .groupBy("labeled_lang", "pred_lang")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
@@ -152,7 +152,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalization-robust document fingerprints: md5 over the
     token-normalized text plus the portable 60-bit variant used by
     the sketch operators. The exact-dedup join key at any scale."""
-    normalized = F.concat_ws(" ", T.tokens(F.col("text")))
+    normalized = F.concat_ws(" ", T.tokens("text"))
     return t(spark, sf_dir, "documents").select(
         "doc_id",
         F.md5(normalized).alias("fingerprint"),
@@ -183,7 +183,7 @@ def text_word_doc_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # builder a lazy plan (no job at build time)
     nd = docs.agg(F.count(F.lit(1)).alias("_nd"))
     return (
-        docs.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("word"))
+        docs.select("doc_id", F.explode(T.tokens("text")).alias("word"))
         .distinct()
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("doc_freq"))
@@ -248,7 +248,7 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the adversarial high-vocabulary docs that made the naive
     distinct × filter scan quadratic). Thresholds: distinct_ratio ≥
     0.2, top_token_frac ≤ 0.2, dup_bigram_frac ≤ 0.75."""
-    toks = T.tokens(F.col("text"))
+    toks = T.tokens("text")
     n = F.size(toks)
     safe_n = F.greatest(n, F.lit(1)).cast("double")
     ndist = F.size(F.array_distinct(toks))
@@ -490,7 +490,7 @@ def text_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-row frames, never a driver collect."""
     from ..functions import text as T
 
-    toks = T.tokens(F.col("text"))
+    toks = T.tokens("text")
     docs = t(spark, sf_dir, "documents").select(toks.alias("toks"))
     uc = (
         docs.select(F.explode("toks").alias("w"))
@@ -640,7 +640,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, per-doc agg); the occurrence stream is never sorted."""
     occ = (
         t(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(T.tokens(F.col("text"))).alias("word"))
+        .select("doc_id", F.explode(T.tokens("text")).alias("word"))
     )
     vocab = occ.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
     tot = vocab.agg(F.sum("c").cast("bigint").alias("n"))
@@ -783,7 +783,7 @@ def text_hashed_linear_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     positive-class counts — are order-independent and
     hash-stable."""
     docs = t(spark, sf_dir, "documents")
-    tok = F.explode(T.tokens(F.col("text"))).alias("tok")
+    tok = F.explode(T.tokens("text")).alias("tok")
     bucket = (
         F.conv(F.substring(F.md5(F.concat(F.lit("b#"), F.col("tok"))), 1, 8), 16, 10)
         .cast("bigint")
@@ -858,7 +858,7 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the vocab phase reuses the existing word-count output
     (`wc_word_count`) instead of re-counting."""
     docs = t(spark, sf_dir, "documents")
-    toks = docs.select("lang", F.explode(T.tokens(F.col("text"))).alias("tok"))
+    toks = docs.select("lang", F.explode(T.tokens("text")).alias("tok"))
     counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     # top-500 via orderBy+limit = TakeOrderedAndProject (distributed
     # top-k, bounded per-partition heaps) — NEVER a single-partition
@@ -925,7 +925,7 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge iterations would re-run only the vocab-sized half."""
     docs = t(spark, sf_dir, "documents")
     vocab = (
-        docs.select(F.explode(T.tokens(F.col("text"))).alias("w"))
+        docs.select(F.explode(T.tokens("text")).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .filter(F.length("w") >= 2)
@@ -997,7 +997,7 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     a TakeOrderedAndProject. Query-term count scales the column
     width, not the shuffle volume."""
     docs = t(spark, sf_dir, "documents")
-    toks = T.tokens(F.col("text"))
+    toks = T.tokens("text")
     # factory, not a default-arg lambda: a two-parameter lambda would
     # make F.filter pass (element, index) and bind the index to term
     def _tf(term: str):
@@ -1110,7 +1110,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     BM25 plans. Per-doc sums accumulate in DECIMAL over rounded
     per-bucket ratios: order-independent, hash-stable."""
     docs = t(spark, sf_dir, "documents")
-    toks = T.tokens(F.col("text"))
+    toks = T.tokens("text")
 
     def bucket(col):
         return (

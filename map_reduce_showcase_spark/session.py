@@ -178,6 +178,8 @@ def get_spark(
         # dispatches on the loaded dtype, so any physical encoding of
         # events.ts (micros/nanos/raw int64) yields the same rows.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # SQL-text helpers double regex backslashes (see functions/text.py TOKEN_SPLIT).
+        .config("spark.sql.parser.escapedStringLiterals", "false")
         # Arrow for every Python<->JVM columnar exchange.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Keep driver UI off in tests/CI.

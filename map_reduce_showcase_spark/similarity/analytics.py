@@ -50,22 +50,17 @@ def kmeans_assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     Struct comparison resolves (cos, -cid) lexicographically, and
     the result is independent of ``collect_list``'s nondeterministic
     order because max scans every element."""
-    from ..functions.vectors import dot, l2_norm
+    from ..functions.vectors import dot_sql, l2_norm, l2_norm_sql
 
     cent_row = centroids.select(
         F.struct(
             F.col("cid"), F.col("cv"), l2_norm("cv").alias("cn")
         ).alias("c")
     ).agg(F.collect_list("c").alias("cs"))
-    vn = l2_norm("v")
-    best = F.array_max(
-        F.transform(
-            "cs",
-            lambda c: F.struct(
-                (dot(F.col("v"), c["cv"]) / (vn * c["cn"])).alias("cos"),
-                (-c["cid"]).alias("ncid"),
-            ),
-        )
+    best = F.expr(
+        "array_max(transform(cs, c -> named_struct("
+        f"'cos', {dot_sql('v', 'c.cv')} / ({l2_norm_sql('v')} * c.cn), "
+        "'ncid', -c.cid)))"
     )
     return (
         vectors.crossJoin(F.broadcast(cent_row))

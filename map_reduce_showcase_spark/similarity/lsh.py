@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..dedup.minhash import first_band_match
 from ..functions.vectors import cosine_from_norms, dot_sql, l2_norm
 
 DIM = 64
@@ -136,15 +137,11 @@ def cosine_pairs_lsh(
         F.array(*keys).alias("bkeys"),
         F.posexplode(F.array(*keys)).alias("band", "bkey"),
     )
-    first_match = F.expr(
-        "NOT exists(zip_with(slice(a.bkeys, 1, a.band), "
-        "slice(b.bkeys, 1, b.band), (x, y) -> x = y), hit -> hit)"
-    )
     cand = (
         bucketed.alias("a")
         .join(bucketed.alias("b"), "bkey")
         .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .filter(first_match)
+        .filter(first_band_match())
         .select(F.col("a.vec_id").alias("v1"), F.col("b.vec_id").alias("v2"))
     )
     # norms folded once per vector, not once per candidate pair

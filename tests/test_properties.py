@@ -151,7 +151,7 @@ def test_portable_hash_and_tokens_agree_with_duckdb(spark, oracle):
         for r in df.select(
             "i",
             portable_hash60(F.col("s")).alias("h"),
-            tokens(F.col("s")).alias("t"),
+            tokens("s").alias("t"),
         ).collect()
     }
     oracle.execute("CREATE OR REPLACE TEMP TABLE corpus(i INT, s VARCHAR)")
@@ -167,6 +167,20 @@ def test_portable_hash_and_tokens_agree_with_duckdb(spark, oracle):
         ).fetchall()
     }
     assert got == want
+
+
+def test_session_pins_unescaped_string_literals(spark):
+    """The SQL-text helpers double their regex backslashes, which is
+    right only while the parser unescapes string literals."""
+    assert spark.conf.get("spark.sql.parser.escapedStringLiterals") == "false"
+
+
+def test_tokens_splits_on_non_letter_digit_runs(spark):
+    from map_reduce_showcase_spark.functions.text import tokens
+
+    df = spark.createDataFrame([("Hello, World! a1b2 café",)], ["text"])
+    got = df.select(tokens("text").alias("t")).first()["t"]
+    assert got == ["hello", "world", "a1b2", "café"]
 
 
 def test_turkish_dotted_capital_is_a_known_lower_divergence(spark, oracle):

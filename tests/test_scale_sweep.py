@@ -295,3 +295,13 @@ def test_fit_zero_work_ratio_records_zero_not_missing():
     # (ADVICE r9), never silently raw-adjudicated
     assert fitted["q"]["leg_work_ratios_4x"]["tail"] is None
     assert fitted["q"]["flag"] is None
+
+
+def test_every_work_probe_runs_on_the_test_catalog(spark, sf_dir):
+    """Each probe calls the engine's helpers directly, so a helper
+    signature change breaks the sweep at run time; running every
+    probe once here catches that at test time."""
+    sweep = _load_sweep()
+    for name, probe in sweep._work_measures().items():
+        work = probe(spark, sf_dir)
+        assert isinstance(work, int) and work > 0, (name, work)

@@ -101,7 +101,7 @@ def test_semantic_dedup_recall_vs_all_pairs(spark, sf_dir):
     v = emb.select(
         "vec_id",
         F.col("embedding").alias("e"),
-        l2_norm(F.col("embedding")).alias("nrm"),
+        l2_norm("embedding").alias("nrm"),
     )
     a = v.select(
         F.col("vec_id").alias("a"), F.col("e").alias("ea"), F.col("nrm").alias("na")
@@ -114,8 +114,7 @@ def test_semantic_dedup_recall_vs_all_pairs(spark, sf_dir):
         for r in a.crossJoin(b)
         .filter(F.col("a") < F.col("b"))
         .filter(
-            cosine_from_norms(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb"))
-            >= 0.45
+            cosine_from_norms("ea", "eb", "na", "nb") >= 0.45
         )
         .collect()
     }
@@ -131,8 +130,7 @@ def test_semantic_dedup_recall_vs_all_pairs(spark, sf_dir):
         for r in va.join(vb, "cell")
         .filter(F.col("a") < F.col("b"))
         .filter(
-            cosine_from_norms(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb"))
-            >= 0.45
+            cosine_from_norms("ea", "eb", "na", "nb") >= 0.45
         )
         .collect()
     }
@@ -142,12 +140,16 @@ def test_semantic_dedup_recall_vs_all_pairs(spark, sf_dir):
     assert 0.15 <= recall <= 0.6, f"semantic-cell recall shifted: {recall:.3f}"
 
 
-def test_vector_expr_text_path(spark, sf_dir):
-    """The SQL-text fast path of the vector helpers (one parsed
-    F.expr instead of a py4j-built lambda tree — r18 driver-cost
-    fix) must be bit-equal to the Column-API lambda path, row for
-    row."""
+def test_vector_helpers_match_sequential_fold(spark, sf_dir):
+    """dot / l2_norm / cosine_from_norms equal a plain-Python
+    sequential double fold over the same 64 rows, bit for bit: the
+    elements widen to double, products and sums run left to right,
+    and one sqrt and one divide finish — the order the DuckDB oracles
+    replay."""
+    import math
+
     from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
 
     from map_reduce_showcase_spark.functions.vectors import (
         cosine_from_norms,
@@ -156,58 +158,74 @@ def test_vector_expr_text_path(spark, sf_dir):
     )
     from map_reduce_showcase_spark.sources.tables import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings").limit(64)
-    both = emb.select(
-        l2_norm("embedding").alias("n_text"),
-        l2_norm(F.col("embedding")).alias("n_col"),
-        dot("embedding", "embedding").alias("d_text"),
-        dot(F.col("embedding"), F.col("embedding")).alias("d_col"),
-    )
-    for r in both.collect():
-        assert repr(r["n_text"]) == repr(r["n_col"])
-        assert repr(r["d_text"]) == repr(r["d_col"])
-    paired = emb.select(
+    def fold(xs):
+        acc = 0.0
+        for x in xs:
+            acc = acc + x
+        return acc
+
+    emb = load_table(spark, sf_dir, "embeddings").orderBy("vec_id").limit(64)
+    pairs = emb.select(
         F.col("embedding").alias("e1"),
-        F.col("embedding").alias("e2"),
-        l2_norm("embedding").alias("n1"),
-        l2_norm("embedding").alias("n2"),
-    ).select(
-        cosine_from_norms("e1", "e2", "n1", "n2").alias("c_text"),
-        cosine_from_norms(
-            F.col("e1"), F.col("e2"), F.col("n1"), F.col("n2")
-        ).alias("c_col"),
+        F.lead("embedding").over(Window.orderBy("vec_id")).alias("e2"),
+    ).filter(F.col("e2").isNotNull())
+    rows = (
+        pairs.select(
+            "e1",
+            "e2",
+            dot("e1", "e2").alias("d"),
+            l2_norm("e1").alias("n1"),
+            l2_norm("e2").alias("n2"),
+        )
+        .select("*", cosine_from_norms("e1", "e2", "n1", "n2").alias("c"))
+        .collect()
     )
-    for r in paired.collect():
-        assert repr(r["c_text"]) == repr(r["c_col"])
+    assert len(rows) == 63
+    for r in rows:
+        d = fold(x * y for x, y in zip(r["e1"], r["e2"]))
+        n1 = math.sqrt(fold(x * x for x in r["e1"]))
+        n2 = math.sqrt(fold(x * x for x in r["e2"]))
+        assert repr(r["d"]) == repr(d)
+        assert repr(r["n1"]) == repr(n1)
+        assert repr(r["n2"]) == repr(n2)
+        assert repr(r["c"]) == repr(d / (n1 * n2))
 
 
-def test_tokens_expr_text_path(spark, sf_dir):
-    """Same pin for the tokenizer/quality-signal text path: the SQL
-    parser unescapes string literals, so the regex doubling in
-    tokens_sql must reproduce the Column path exactly."""
-    from pyspark.sql import functions as F
-
+def test_text_signals_match_duckdb_oracle(spark, oracle, sf_dir):
+    """tokens / punct_ratio / stopword_ratio / quality_score equal
+    the DuckDB oracle expressions of ``text_quality`` on the same 64
+    documents — the ratios unrounded, the score as the oracle rounds
+    it."""
     from map_reduce_showcase_spark.functions.text import (
         punct_ratio,
         quality_score,
         stopword_ratio,
         tokens,
     )
+    from map_reduce_showcase_spark.plans import queries_text as QT
+    from map_reduce_showcase_spark.plans.registry import oracle_sql_map
     from map_reduce_showcase_spark.sources.tables import load_table
 
-    docs = load_table(spark, sf_dir, "documents").limit(64)
-    both = docs.select(
-        tokens("text").alias("t_text"),
-        tokens(F.col("text")).alias("t_col"),
-        punct_ratio("text").alias("p_text"),
-        punct_ratio(F.col("text")).alias("p_col"),
-        stopword_ratio("text").alias("s_text"),
-        stopword_ratio(F.col("text")).alias("s_col"),
-        quality_score("text").alias("q_text"),
-        quality_score(F.col("text")).alias("q_col"),
-    )
-    for r in both.collect():
-        assert r["t_text"] == r["t_col"]
-        assert repr(r["p_text"]) == repr(r["p_col"])
-        assert repr(r["s_text"]) == repr(r["s_col"])
-        assert repr(r["q_text"]) == repr(r["q_col"])
+    docs = load_table(spark, sf_dir, "documents").orderBy("doc_id").limit(64)
+    got = {
+        r["doc_id"]: (r["t"], repr(r["p"]), repr(r["s"]), repr(r["q"]))
+        for r in docs.select(
+            "doc_id",
+            tokens("text").alias("t"),
+            punct_ratio("text").alias("p"),
+            stopword_ratio("text").alias("s"),
+            quality_score("text").alias("q"),
+        ).collect()
+    }
+    assert len(got) == 64
+    want = {
+        doc_id: (t, repr(p), repr(s), repr(q))
+        for doc_id, t, p, s, q in oracle.execute(
+            f"""SELECT d.doc_id, {QT._TOKENS_SQL}, {QT._PUNCT_SQL},
+                       {QT._STOPRATIO_SQL}, o.quality
+                FROM documents d JOIN ({oracle_sql_map()["text_quality"]}) o
+                  ON d.doc_id = o.doc_id"""
+        ).fetchall()
+        if doc_id in got
+    }
+    assert got == want

@@ -325,7 +325,7 @@ def _sim_lsh_probe_work(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     planes = hyperplane_signs()
-    bucket = lsh_bucket(F.col("embedding"), planes)
+    bucket = lsh_bucket("embedding", planes)
     probes = F.explode(
         F.array(
             bucket, *[bucket.bitwiseXOR(F.lit(1 << p)) for p in range(len(planes))]
@@ -354,7 +354,7 @@ def _bpe_pair_work(spark, sf_dir):
     from map_reduce_showcase_spark.functions import text as T
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(F.explode(T.tokens(F.col("text"))).alias("w"))
+    toks = docs.select(F.explode(T.tokens("text")).alias("w"))
     n_tokens = toks.count()
     n_pairs = (
         toks.groupBy("w")
@@ -452,7 +452,7 @@ def _token_occurrence_work(spark, sf_dir):
 
         docs = load_table(spark, sf_dir, "documents")
         _TOKEN_WORK_CACHE[sf_dir] = int(
-            docs.select(F.explode(T.tokens(F.col("text")))).count()
+            docs.select(F.explode(T.tokens("text"))).count()
         )
     return _TOKEN_WORK_CACHE[sf_dir]
 
