@@ -15,16 +15,27 @@ their scripts 1:1:
   ``src/app/grep.rs:18-34``),
 * ``process_output`` → the app's exact human-readable format.
 
+Each submit computes its result once and persists it: the driver
+copy arrives as one Arrow table (``DataFrame.toArrow``) and the output
+files are written from the same cached blocks. One formatter per app
+turns a result table into the reference's text and owns its
+presentation order, so submit and process share it. Client input that
+cannot make a job raises ValueError before any Spark work.
+
 Everything in between — scheduling, shuffle, retries, barriers — is
 Spark's driver/executors (SURVEY.md §2.3: C1-C10 map to built-ins).
 """
 
 from __future__ import annotations
 
+import glob
+import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from ..sources.sinks import write_n_files
 from ..sources.text import read_lines_with_path, read_whole_files
 from .mapreduce import (
     format_grep,
@@ -33,16 +44,23 @@ from .mapreduce import (
     grep_lines,
     parse_edge_lines,
     vertex_degree,
-    word_count_report,
+    word_count,
 )
 
-APPS = ("wc", "grep", "vertex-degree")
+#: app name → formatter of its result table (submit and process share it)
+_FORMATTERS = {
+    "wc": format_word_count,
+    "grep": format_grep,
+    "vertex-degree": format_vertex_degree,
+}
+APPS = tuple(_FORMATTERS)
 
 
 @dataclass
 class JobResult:
     """What the reference's poll+process yields: the result rows and
-    the formatted output string."""
+    the formatted output string. ``df`` is the unsorted result; the
+    formatter applies the presentation order to ``output``."""
 
     df: DataFrame
     output: str
@@ -61,46 +79,56 @@ def submit_job(
     """Run one reference-style job to completion (the Spark action IS
     submit+poll — blocking, with retries and stage barriers inside).
 
-    Unknown ``app`` raises ValueError at submit time, matching the
-    coordinator's InvalidArgument."""
-    args = args or []
-    cached = None  # unpersisted in the finally below, success or not
-    try:
-        if app == "wc":
-            df = word_count_report(read_whole_files(spark, files), "content")
-            fmt = format_word_count
-        elif app == "grep":
-            term = _parse_term(args)
-            df = grep_lines(read_lines_with_path(spark, files), term)
-            fmt = format_grep
-        elif app == "vertex-degree":
-            # persist the parsed edges: the validation pass, the result,
-            # and an optional sink all consume them — one parse, not three
-            cached = parse_edge_lines(
-                read_lines_with_path(spark, files).select("line")
-            ).persist()
-            if cached.filter(~cached.valid).limit(1).count():
-                # reference: malformed line => fatal task failure => job
-                # failed with recorded errors (src/vertex_degree.rs:26-27)
-                raise ValueError("vertex-degree: malformed edge line")
-            df = vertex_degree(cached, "src", "dst")
-            fmt = format_vertex_degree
-        else:
-            raise ValueError(f"unknown app {app!r}; known: {APPS}")
+    The result is computed once: ``persist`` holds it (lineage stays,
+    so a lost block recomputes), one ``toArrow`` brings it to the
+    driver and ``write_n_files`` reads the same blocks. The cache is
+    released before returning; ``JobResult.df`` recomputes if re-used.
 
+    Unknown ``app``, an empty ``files`` list and ``n_reduce < 1``
+    raise ValueError at submit time, matching the coordinator's
+    InvalidArgument. A malformed vertex-degree edge line raises
+    ValueError before anything is written."""
+    _check_app(app)
+    if not files:
+        raise ValueError(f"{app}: no input files")
+    if n_reduce < 1:
+        raise ValueError(f"{app}: n_reduce must be at least 1, got {n_reduce}")
+    df = _plan(spark, app, files, args or [])
+    df.persist()
+    try:
+        table = df.toArrow()
+        if app == "vertex-degree" and table["vertex"].null_count:
+            # reference: malformed line => fatal task failure => job
+            # failed with recorded errors (src/vertex_degree.rs:26-27)
+            raise ValueError("vertex-degree: malformed edge line")
         n_files = 0
         if output_dir is not None:
-            from ..sources.sinks import write_n_files
-
             n_files = write_n_files(df, output_dir, n_reduce, by_col=df.columns[0])
-        # all actions complete before the finally drops the cache; the
-        # returned df stays valid (recomputes from source if re-used)
-        return JobResult(
-            df=df, output=fmt(df.collect()), output_dir=output_dir, n_output_files=n_files
-        )
     finally:
-        if cached is not None:
-            cached.unpersist()
+        df.unpersist()
+    return JobResult(
+        df=df, output=_FORMATTERS[app](table), output_dir=output_dir, n_output_files=n_files
+    )
+
+
+def _plan(spark: SparkSession, app: str, files: list[str], args: list[str]) -> DataFrame:
+    """The app's result plan, unsorted (the formatter orders it)."""
+    if app == "wc":
+        return word_count(read_whole_files(spark, files), "content")
+    if app == "grep":
+        term = _parse_term(args)
+        return grep_lines(read_lines_with_path(spark, files), term)
+    edges = parse_edge_lines(read_lines_with_path(spark, files).select("line"))
+    # a malformed line gets NULL endpoints, so the one aggregate has a
+    # NULL-vertex row exactly when some line was malformed
+    return vertex_degree(
+        edges.select(
+            F.when(edges.valid, edges.src).alias("src"),
+            F.when(edges.valid, edges.dst).alias("dst"),
+        ),
+        "src",
+        "dst",
+    )
 
 
 def process_job(spark: SparkSession, app: str, output_dir: str) -> JobResult:
@@ -112,22 +140,20 @@ def process_job(spark: SparkSession, app: str, output_dir: str) -> JobResult:
     Files are the parquet ``write_n_files`` wrote (the engine's
     ``mr-out-*`` equivalent; SURVEY.md §1.4 maps F11's
     length-delimited codec to parquet). Hash-partitioned files carry
-    no global order, so presentation order is (re)applied here, as
-    the reference's process step re-sorts per app
-    (``src/app/wc.rs:60-66``, ``src/app/grep.rs:64-78``)."""
+    no global order; the app's formatter applies it, as the
+    reference's process step re-sorts per app (``src/app/wc.rs:60-66``,
+    ``src/app/grep.rs:64-78``). A directory without ``part-*`` files
+    raises ValueError."""
+    _check_app(app)
+    if not glob.glob(os.path.join(output_dir, "part-*")):
+        raise ValueError(f"{app}: no part-* output files in {output_dir!r}")
+    df = spark.read.parquet(output_dir)
+    return JobResult(df=df, output=_FORMATTERS[app](df.toArrow()), output_dir=output_dir)
+
+
+def _check_app(app: str) -> None:
     if app not in APPS:
         raise ValueError(f"unknown app {app!r}; known: {APPS}")
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(output_dir)
-    if app == "wc":
-        df = df.orderBy(F.col("cnt").asc(), F.col("word").asc())
-        fmt = format_word_count
-    elif app == "grep":
-        fmt = format_grep  # sorts (path, line_no) itself
-    else:
-        fmt = format_vertex_degree  # sorts by vertex itself
-    return JobResult(df=df, output=fmt(df.collect()), output_dir=output_dir)
 
 
 def _parse_term(args: list[str]) -> str:

@@ -22,6 +22,8 @@ vocabulary size × partitions, not corpus size.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -44,7 +46,7 @@ def word_count(text_df: DataFrame, text_col: str = "text") -> DataFrame:
     """wc: token → count (W1-W3), columns ``(word, cnt)``.
 
     Global (count asc, word asc) presentation order (W4,
-    ``src/app/wc.rs:60-66``) is applied by :func:`word_count_report`;
+    ``src/app/wc.rs:60-66``) is applied by :func:`format_word_count`;
     the aggregate itself is order-free so the optimizer can fuse it.
     """
     from ..functions.util import rebalance
@@ -57,16 +59,23 @@ def word_count(text_df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def word_count_report(text_df: DataFrame, text_col: str = "text") -> DataFrame:
-    """wc with the reference's output ordering (count asc, word asc)."""
-    return word_count(text_df, text_col).orderBy(F.col("cnt").asc(), F.col("word").asc())
+def _concat_rows(*parts) -> str:
+    """Join ``parts`` (Arrow columns and ``str`` constants) row by row,
+    then concatenate the rows into one string — all inside Arrow
+    compute, no Python object per row."""
+    rows = pc.binary_join_element_wise(*parts, "")
+    if isinstance(rows, pa.ChunkedArray):
+        rows = rows.combine_chunks()
+    return pc.binary_join(pa.ListArray.from_arrays([0, len(rows)], rows), "")[0].as_py()
 
 
-def format_word_count(rows) -> str:
+def format_word_count(table: pa.Table) -> str:
     """Reference ``process_output`` format: ``"{count}\\t{word}\\n"``
-    (``src/app/wc.rs:51-74``). Driver-side, tiny: one line per
-    distinct word."""
-    return "".join(f"{r['cnt']}\t{r['word']}\n" for r in rows)
+    in (count asc, word asc) order (``src/app/wc.rs:51-74``), from a
+    ``(word, cnt)`` table. Words compare by code point, as Spark's
+    binary string order and the reference's ``String`` order do."""
+    t = table.sort_by([("cnt", "ascending"), ("word", "ascending")])
+    return _concat_rows(pc.cast(t["cnt"], pa.string()), "\t", t["word"], "\n")
 
 
 def grep_lines(
@@ -93,18 +102,22 @@ def grep_lines(
     )
 
 
-def format_grep(rows) -> str:
+def format_grep(table: pa.Table) -> str:
     """Reference grep output: per file ``basename:`` then
     ``\\t{line_no}: {line}`` per match, files in path order, lines in
-    line order (``src/app/grep.rs:80-102``)."""
-    out: list[str] = []
-    current = None
-    for r in sorted(rows, key=lambda r: (r["path"], r["line_no"])):
-        if r["path"] != current:
-            current = r["path"]
-            out.append(f"{current.rsplit('/', 1)[-1]}:\n")
-        out.append(f"\t{r['line_no']}: {r['line']}\n")
-    return "".join(out)
+    line order (``src/app/grep.rs:80-102``), from a
+    ``(path, line_no, line)`` table."""
+    t = table.sort_by([("path", "ascending"), ("line_no", "ascending")])
+    path = t["path"].combine_chunks()
+    if len(path) == 0:
+        return ""
+    # a file's header goes before its first match: where the path changes
+    previous = pa.concat_arrays([pa.nulls(1, path.type), path.slice(0, len(path) - 1)])
+    new_file = pc.fill_null(pc.not_equal(path, previous), True)
+    basename = pc.replace_substring_regex(path, "^.*/", "")
+    header = pc.if_else(new_file, pc.binary_join_element_wise(basename, ":\n", ""), "")
+    line_no = pc.cast(t["line_no"], pa.string())
+    return _concat_rows(header, "\t", line_no, ": ", t["line"], "\n")
 
 
 def vertex_degree(edges_df: DataFrame, src_col: str, dst_col: str) -> DataFrame:
@@ -136,10 +149,12 @@ def parse_edge_lines(lines_df: DataFrame, line_col: str = "line") -> DataFrame:
     Exact parity with the Rust parse: ``split_whitespace().take(2)``
     ignores any tokens past the first two, and ``parse::<u64>``
     rejects negatives — so extra trailing tokens are fine but a
-    negative vertex id is malformed."""
+    negative vertex id is malformed. The ``try_`` forms make a
+    missing or non-numeric token NULL (so ``valid`` is false) instead
+    of failing the task under ANSI mode, Spark 4's default."""
     parts = F.split(F.trim(F.col(line_col)), r"\s+")
-    src = F.element_at(parts, 1).cast("long")
-    dst = F.element_at(parts, 2).cast("long")
+    src = F.try_element_at(parts, F.lit(1)).try_cast("long")
+    dst = F.try_element_at(parts, F.lit(2)).try_cast("long")
     return lines_df.select(
         src.alias("src"),
         dst.alias("dst"),
@@ -147,7 +162,11 @@ def parse_edge_lines(lines_df: DataFrame, line_col: str = "line") -> DataFrame:
     )
 
 
-def format_vertex_degree(rows) -> str:
+def format_vertex_degree(table: pa.Table) -> str:
     """Reference output: numeric sort by vertex, ``"{v}\\t{d}\\n"``
-    (``src/app/vertex_degree.rs:73-90``)."""
-    return "".join(f"{r['vertex']}\t{r['degree']}\n" for r in sorted(rows, key=lambda r: r["vertex"]))
+    (``src/app/vertex_degree.rs:73-90``), from a ``(vertex, degree)``
+    table."""
+    t = table.sort_by("vertex")
+    return _concat_rows(
+        pc.cast(t["vertex"], pa.string()), "\t", pc.cast(t["degree"], pa.string()), "\n"
+    )

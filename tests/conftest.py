@@ -118,3 +118,69 @@ def oracle():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+#: Inputs for the three reference apps, written under a session tmp
+#: dir by ``app_inputs``. ``alphabet2`` has count ties (a, b, z, é all
+#: occur 4 times) and non-ASCII letters that sort after ``z``;
+#: ``gutenberg`` is six prose files, one with CRLF line ends, where
+#: ``the``, ``Elizabeth`` and ``whale`` match in several files.
+_APP_TEXTS = {
+    "alphabet2": {
+        "letters1.txt": "a b c d e\nA a, b! z\nz z é\n",
+        "letters2.txt": "c-d 42 É\nÉté a_b\nx y\n",
+        "letters3.txt": "b z é é\nÿ\n",
+    },
+    "gutenberg": {
+        "book1.txt": (
+            "The harbour was grey when Elizabeth walked down to the boats.\n"
+            "Nobody there had seen a whale since the winter of the storm;\n"
+            "\n"
+            "still, the old men talked of them, and she listened.\n"
+        ),
+        "book2.txt": (
+            "ELIZABETH wrote the letter twice, then burned both copies.\r\n"
+            "Her brother said the sea would keep its own counsel.\r\n"
+            "Elizabeth's answer was shorter than anyone expected.\r\n"
+        ),
+        "book3.txt": "A whale! A whale! cried the boy from the rigging.\nThen silence.\n",
+        "book4.txt": "Rain, and more rain — the kind that soaks through wool.\n",
+        "book5.txt": "They counted forty-two whales, or perhaps forty-one.\n",
+        "book6.txt": (
+            "At the end of the voyage the whalers were paid in salt cod.\n"
+            "Other crews were paid in nothing at all.\n"
+        ),
+    },
+}
+
+
+def _edge_lines() -> list[str]:
+    """Two-token edge lines over ~60 vertices, with a self-loop, a
+    repeated edge, ids of 1-3 digits (numeric vs text order) and both
+    tab and multi-space separators."""
+    lines = [f"{(i * 7) % 61}\t{(i * 13 + 5) % 101}" for i in range(80)]
+    return lines + ["0 0", "3   100", "3 100", "10 2"]
+
+
+@pytest.fixture(scope="session")
+def app_inputs(tmp_path_factory) -> dict[str, list[str]]:
+    """Corpus name → sorted input file paths for wc, grep and
+    vertex-degree: ``alphabet2`` and ``gutenberg`` (text) and
+    ``edges`` (two edge-list files)."""
+    root = tmp_path_factory.mktemp("app_inputs")
+    edges = _edge_lines()
+    files = {
+        **_APP_TEXTS,
+        "edges": {
+            "edges1.txt": "\n".join(edges[::2]) + "\n",
+            "edges2.txt": "\n".join(edges[1::2]) + "\n",
+        },
+    }
+    corpora: dict[str, list[str]] = {}
+    for corpus, texts in files.items():
+        (root / corpus).mkdir()
+        for name, text in texts.items():
+            # newline="" keeps the CRLF file's line ends as written
+            (root / corpus / name).write_text(text, encoding="utf-8", newline="")
+        corpora[corpus] = sorted(str(root / corpus / name) for name in texts)
+    return corpora

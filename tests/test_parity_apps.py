@@ -1,17 +1,18 @@
-"""Golden-output parity: run the three reference applications on the
-REFERENCE'S OWN data fixtures and compare byte-for-byte against an
-independent Python reimplementation of the reference semantics
-(``/root/reference/src/app/{wc,grep,vertex_degree}.rs``).
+"""Golden-output parity: run the three reference applications on
+small in-repo corpora (the ``app_inputs`` fixture) and compare
+byte-for-byte against an independent Python reimplementation of the
+reference semantics (``src/app/{wc,grep,vertex_degree}.rs``).
 
 The reference's process_output_fn totally orders its output, making
 results byte-comparable regardless of scheduling (SURVEY.md §5.3) —
-the property these tests exploit.
+the property these tests exploit. Every golden first asserts that
+its input list and expected output are non-empty, so an empty input
+cannot pass by comparing ``""`` with ``""``.
 """
 
 from __future__ import annotations
 
 import collections
-import glob
 import re
 
 import pytest
@@ -23,16 +24,12 @@ from map_reduce_showcase_spark.operators.mapreduce import (
     grep_lines,
     parse_edge_lines,
     vertex_degree,
-    word_count_report,
+    word_count,
 )
 from map_reduce_showcase_spark.sources.text import (
     read_lines_with_path,
     read_whole_files,
 )
-
-GUTENBERG = sorted(glob.glob("/root/reference/data/gutenberg/*.txt"))
-ALPHABET = sorted(glob.glob("/root/reference/data/alphabet2/*.txt"))
-EDGES = sorted(glob.glob("/root/reference/data/graph-edges-medium/*.txt"))
 
 # \p{L}-equivalent in Python re: letters only (is_alphabetic in Rust)
 _WORD_RE = re.compile(r"[^\W\d_]+", re.UNICODE)
@@ -77,39 +74,48 @@ def _expected_vertex_degree(paths: list[str]) -> str:
     return "".join(f"{v}\t{d}\n" for v, d in sorted(counts.items()))
 
 
-@pytest.mark.parametrize("paths", [ALPHABET, GUTENBERG], ids=["alphabet2", "gutenberg"])
-def test_wc_golden(spark, paths):
+@pytest.mark.parametrize("corpus", ["alphabet2", "gutenberg"])
+def test_wc_golden(spark, app_inputs, corpus):
+    paths = app_inputs[corpus]
+    want = _expected_wc(paths)
+    assert paths and want
     df = read_whole_files(spark, paths)
-    got = format_word_count(word_count_report(df, "content").collect())
-    assert got == _expected_wc(paths)
+    assert format_word_count(word_count(df, "content").toArrow()) == want
 
 
 @pytest.mark.parametrize(
     "term,paths",
     [
-        ("the", GUTENBERG[:2]),
-        ("Elizabeth", GUTENBERG[:2]),
-        ("whale", GUTENBERG),  # full 6-file corpus, multi-file ordering
+        ("the", slice(2)),
+        ("Elizabeth", slice(2)),
+        ("whale", slice(None)),  # full 6-file corpus, multi-file ordering
     ],
 )
-def test_grep_golden(spark, term, paths):
-    lines = read_lines_with_path(spark, paths)
-    got = format_grep(grep_lines(lines, term).collect())
-    assert got == _expected_grep(paths, term)
+def test_grep_golden(spark, app_inputs, term, paths):
+    files = app_inputs["gutenberg"][paths]
+    want = _expected_grep(files, term)
+    assert files and want
+    lines = read_lines_with_path(spark, files)
+    assert format_grep(grep_lines(lines, term).toArrow()) == want
 
 
-def test_vertex_degree_golden(spark):
-    lines = read_lines_with_path(spark, EDGES).select("line")
+def test_vertex_degree_golden(spark, app_inputs):
+    paths = app_inputs["edges"]
+    want = _expected_vertex_degree(paths)
+    assert paths and want
+    lines = read_lines_with_path(spark, paths).select("line")
     edges = parse_edge_lines(lines)
     # reference fails the whole job on malformed input (V1 semantics)
     assert edges.filter(~edges.valid).count() == 0
-    got = format_vertex_degree(vertex_degree(edges, "src", "dst").collect())
-    assert got == _expected_vertex_degree(EDGES)
+    got = format_vertex_degree(vertex_degree(edges, "src", "dst").toArrow())
+    assert got == want
 
 
-def test_wc_multifile_union_is_one_job(spark):
+def test_wc_multifile_union_is_one_job(spark, app_inputs):
     """Reference F1: N input files → one job (implicit union). Our
     scan unions all files into one DataFrame; counts must equal the
     per-file sum."""
-    df = read_whole_files(spark, GUTENBERG)
-    assert df.count() == len(GUTENBERG)
+    paths = app_inputs["gutenberg"]
+    assert len(paths) == 6
+    df = read_whole_files(spark, paths)
+    assert df.count() == len(paths)

@@ -8,16 +8,18 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from map_reduce_showcase_spark.operators.jobs import submit_job
+from map_reduce_showcase_spark.operators.jobs import process_job, submit_job
 from map_reduce_showcase_spark.sources.sinks import (
     write_bucketed,
     write_n_files,
     write_partitioned,
 )
 from map_reduce_showcase_spark.sources.tables import load_table
-
-ALPHABET = sorted(glob.glob("/root/reference/data/alphabet2/*.txt"))
-EDGES = sorted(glob.glob("/root/reference/data/graph-edges-medium/*.txt"))
+from tests.test_parity_apps import (
+    _expected_grep,
+    _expected_vertex_degree,
+    _expected_wc,
+)
 
 
 def test_write_partitioned_prunes(spark, sf_dir):
@@ -86,55 +88,134 @@ def test_csv_json_round_trip(spark, sf_dir):
         assert json_back.count() == nat.count()
 
 
-def test_job_facade_wc(spark):
-    res = submit_job(spark, "wc", ALPHABET, n_reduce=3)
-    assert res.output.endswith("\tz\n") or "\ta\n" in res.output
+def test_job_facade_wc(spark, app_inputs):
+    files = app_inputs["alphabet2"]
+    res = submit_job(spark, "wc", files, n_reduce=3)
+    assert res.output == _expected_wc(files)
     assert res.df.columns == ["word", "cnt"]
 
 
-def test_job_facade_grep_args(spark):
-    res = submit_job(spark, "grep", ALPHABET, args=["--term", "a"])
+def test_job_facade_grep_args(spark, app_inputs):
+    files = app_inputs["alphabet2"]
+    res = submit_job(spark, "grep", files, args=["--term", "a"])
     assert "letters1.txt:" in res.output
+    assert res.output == _expected_grep(files, "a")
     with pytest.raises(ValueError, match="--term"):
-        submit_job(spark, "grep", ALPHABET, args=[])
+        submit_job(spark, "grep", files, args=[])
 
 
-def test_job_facade_vertex_degree_with_output(spark):
+def test_job_facade_vertex_degree_with_output(spark, app_inputs):
+    files = app_inputs["edges"]
     with tempfile.TemporaryDirectory() as d:
         res = submit_job(
-            spark, "vertex-degree", EDGES, output_dir=f"{d}/out", n_reduce=4
+            spark, "vertex-degree", files, output_dir=f"{d}/out", n_reduce=4
         )
         assert res.n_output_files == 4
         assert len(glob.glob(f"{d}/out/part-*")) == 4
         assert res.output.splitlines()[0].startswith("0\t")
+        assert res.output == _expected_vertex_degree(files)
 
 
 def test_job_facade_unknown_app(spark):
     with pytest.raises(ValueError, match="unknown app"):
-        submit_job(spark, "nope", ALPHABET)
+        submit_job(spark, "nope", ["/tmp/nowhere.txt"])
 
 
-def test_cli_submit_wc(spark, capsys):
+def _rejected_before_spark(spark, call, match: str) -> None:
+    """``call()`` raises ValueError matching ``match`` and starts no
+    Spark job: bad client input is rejected up front."""
+    sc = spark.sparkContext
+    group = f"reject-{match}"
+    sc.setJobGroup(group, "client input rejected up front")
+    try:
+        with pytest.raises(ValueError, match=match):
+            call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_submit_rejects_empty_file_list(spark, tmp_path):
+    _rejected_before_spark(
+        spark, lambda: submit_job(spark, "wc", [], str(tmp_path / "out")), "no input files"
+    )
+    assert not (tmp_path / "out").exists()
+
+
+def test_submit_rejects_n_reduce_below_one(spark, app_inputs, capsys):
+    from map_reduce_showcase_spark.cli import main
+
+    files = app_inputs["alphabet2"]
+    _rejected_before_spark(
+        spark, lambda: submit_job(spark, "wc", files, n_reduce=0), "n_reduce"
+    )
+    rc = main(["submit", "--app", "wc", "--files", *files, "--num-reduce", "0"])
+    assert rc == 2
+    assert "n_reduce" in capsys.readouterr().err
+
+
+def test_process_rejects_dir_without_part_files(spark, tmp_path, capsys):
+    from map_reduce_showcase_spark.cli import main
+
+    empty = str(tmp_path)
+    _rejected_before_spark(
+        spark, lambda: process_job(spark, "wc", empty), "no part-\\* output files"
+    )
+    rc = main(["process", "--app", "wc", "--output-dir", empty])
+    assert rc == 2
+    assert "no part-* output files" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize("bad_line", ["1 x", "-1 2"])
+def test_vertex_degree_malformed_line_fails_before_writing(spark, tmp_path, bad_line):
+    """Reference V1: one malformed edge line fails the job. A
+    non-numeric token and a negative id both raise ValueError, and no
+    output file is written."""
+    edges = tmp_path / "edges.txt"
+    edges.write_text(f"1 2\n{bad_line}\n3 4\n")
+    out_dir = tmp_path / "out"
+    with pytest.raises(ValueError, match="malformed edge line"):
+        submit_job(spark, "vertex-degree", [str(edges)], str(out_dir), n_reduce=2)
+    assert not glob.glob(f"{out_dir}/part-*")
+
+
+def test_submit_and_process_share_presentation_order(spark, tmp_path, app_inputs):
+    """wc's (count, word) order holds on both paths, with count ties
+    broken by code point (é after z); a grep term that matches nothing
+    gives empty output on both paths."""
+    files = app_inputs["alphabet2"]
+    want = _expected_wc(files)
+    assert "4\tz\n4\té\n" in want
+    out_dir = str(tmp_path / "wc")
+    assert submit_job(spark, "wc", files, out_dir, n_reduce=3).output == want
+    assert process_job(spark, "wc", out_dir).output == want
+
+    out_dir = str(tmp_path / "grep")
+    assert submit_job(spark, "grep", files, out_dir, args=["--term", "qqq"]).output == ""
+    assert process_job(spark, "grep", out_dir).output == ""
+
+
+def test_cli_submit_wc(spark, app_inputs, capsys):
     """mr-client parity: the CLI prints the app's formatted output,
     byte-identical to the golden wc expectation.
     (Re-uses the active session via getOrCreate.)"""
     from map_reduce_showcase_spark.cli import main
-    from tests.test_parity_apps import _expected_wc
 
-    rc = main(["submit", "--app", "wc", "--files", *ALPHABET, "--num-reduce", "2"])
+    files = app_inputs["alphabet2"]
+    rc = main(["submit", "--app", "wc", "--files", *files, "--num-reduce", "2"])
     out = capsys.readouterr().out
     assert rc == 0
-    assert out == _expected_wc(ALPHABET)
+    assert out == _expected_wc(files)
 
 
-def test_cli_flags_after_args_are_app_args(spark, tmp_path, capsys):
+def test_cli_flags_after_args_are_app_args(spark, tmp_path, app_inputs, capsys):
     """Flags placed after --args belong to the app; client flags
     before --args still parse (the REMAINDER-swallowing trap)."""
     from map_reduce_showcase_spark.cli import main
 
     out_dir = str(tmp_path / "out")
     rc = main(
-        ["submit", "--app", "grep", "--files", *ALPHABET,
+        ["submit", "--app", "grep", "--files", *app_inputs["alphabet2"],
          "--output-dir", out_dir, "--num-reduce", "2",
          "--args", "--term", "a"]
     )
@@ -143,10 +224,10 @@ def test_cli_flags_after_args_are_app_args(spark, tmp_path, capsys):
     assert "letters1.txt:" in capsys.readouterr().out
 
 
-def test_cli_grep_missing_term_errors(spark, capsys):
+def test_cli_grep_missing_term_errors(spark, app_inputs, capsys):
     from map_reduce_showcase_spark.cli import main
 
-    rc = main(["submit", "--app", "grep", "--files", *ALPHABET])
+    rc = main(["submit", "--app", "grep", "--files", *app_inputs["alphabet2"]])
     assert rc == 2
     assert "--term" in capsys.readouterr().err
 
@@ -155,15 +236,13 @@ def test_cli_grep_missing_term_errors(spark, capsys):
     ("app", "args"),
     [("wc", []), ("grep", ["--term", "a"]), ("vertex-degree", [])],
 )
-def test_process_readback_matches_submit(spark, tmp_path, app, args):
+def test_process_readback_matches_submit(spark, tmp_path, app_inputs, app, args):
     """Reference two-command parity (src/client.rs:66-93): a SECOND
     invocation that only re-reads the submit's output files must
     format byte-identically to the in-session path — the round trip
     through hash-partitioned files loses row order, so this also
     proves process re-establishes presentation order per app."""
-    from map_reduce_showcase_spark.operators.jobs import process_job
-
-    files = EDGES if app == "vertex-degree" else ALPHABET
+    files = app_inputs["edges" if app == "vertex-degree" else "alphabet2"]
     out_dir = str(tmp_path / "out")
     submitted = submit_job(
         spark, app, files, output_dir=out_dir, n_reduce=4, args=args
@@ -173,11 +252,11 @@ def test_process_readback_matches_submit(spark, tmp_path, app, args):
     assert processed.output  # non-trivial golden
 
 
-def test_cli_process_subcommand(spark, tmp_path, capsys):
+def test_cli_process_subcommand(spark, tmp_path, app_inputs, capsys):
     from map_reduce_showcase_spark.cli import main
 
     out_dir = str(tmp_path / "out")
-    rc = main(["submit", "--app", "wc", "--files", *ALPHABET,
+    rc = main(["submit", "--app", "wc", "--files", *app_inputs["alphabet2"],
                "--output-dir", out_dir, "--num-reduce", "2"])
     assert rc == 0
     first = capsys.readouterr().out
@@ -189,8 +268,6 @@ def test_cli_process_subcommand(spark, tmp_path, capsys):
 
 
 def test_process_unknown_app(spark):
-    from map_reduce_showcase_spark.operators.jobs import process_job
-
     with pytest.raises(ValueError, match="unknown app"):
         process_job(spark, "nope", "/tmp/nowhere")
 
@@ -380,7 +457,7 @@ def test_zorder_layout_prunes_files_on_both_dimensions(spark, sf_dir, tmp_path):
     )
 
 
-def test_lengthdelim_datasource_reads_reference_format(spark, tmp_path):
+def test_lengthdelim_datasource_reads_reference_format(spark, tmp_path, app_inputs):
     """Interop with the reference's on-disk format via the Spark 4
     Python Data Source API: write wc output in the reference's exact
     framing (u32-BE length prefix, key/value packets alternating,
@@ -400,8 +477,9 @@ def test_lengthdelim_datasource_reads_reference_format(spark, tmp_path):
 
     spark.dataSource.register(LengthDelimitedDataSource)
 
-    wc = word_count(read_whole_files(spark, ALPHABET), "content")
+    wc = word_count(read_whole_files(spark, app_inputs["alphabet2"]), "content")
     expected = {r["word"]: r["cnt"] for r in wc.collect()}
+    assert expected
     # shard the counts over 3 reference-style output files
     items = sorted(expected.items())
     for i in range(3):
@@ -428,7 +506,7 @@ def test_lengthdelim_datasource_reads_reference_format(spark, tmp_path):
     assert got == expected
 
 
-def test_reference_format_write_read_round_trip(spark, tmp_path):
+def test_reference_format_write_read_round_trip(spark, tmp_path, app_inputs):
     """Bidirectional interop: wc results written as reference-framed
     mr-out files (hash-partitioned on the key, one file per reduce
     partition, empty partitions still get a file — the reference
@@ -444,8 +522,9 @@ def test_reference_format_write_read_round_trip(spark, tmp_path):
     from map_reduce_showcase_spark.sources.text import read_whole_files
 
     spark.dataSource.register(LengthDelimitedDataSource)
-    wc = word_count(read_whole_files(spark, ALPHABET), "content")
+    wc = word_count(read_whole_files(spark, app_inputs["alphabet2"]), "content")
     expected = {r["word"]: r["cnt"] for r in wc.collect()}
+    assert expected
 
     kv = wc.select(
         F.encode(F.col("word"), "UTF-8").alias("key"),
