@@ -50,17 +50,16 @@ from map_reduce_showcase_spark.session import get_spark
 # Shared with tools/ab_compare.py and tools/freshness_check.py via
 # the engine-free constants module (ADVICE r13) — re-exported here so
 # bench.BOX_LOAD_THRESHOLD_1M / bench.HEADLINE readers (tests, docs)
-# keep a single source of truth. HEADLINE/EXTENDED moved there in r16
-# so the freshness tripwire's mandatory-ABBA gate (r15 verdict #2) can
-# know which queries feed the anchor without paying — or inheriting a
+# keep a single source of truth without paying — or inheriting a
 # failure from — the full registry import chain.
 from bench_constants import (  # noqa: E402,F401
-    ANCHOR_BAND_MIN_OF_3_SEC,
     BOX_LOAD_THRESHOLD_1M,
     BOX_LOAD_THRESHOLD_5M,
     EXTENDED,
     HEADLINE,
     IDLE_SETTLE_MIN_SEC,
+    read_cpu_steal,
+    steal_record,
 )
 
 #: Bounded wait-for-idle (round-12 verdict #2): ``box_load_ok:
@@ -89,10 +88,13 @@ FINAL_LINE_BUDGET_BYTES = 1500
 def compact_record(diag: dict) -> dict:
     """Driver-facing compact record derived from the full diagnostic
     record: everything the driver grades (metric/value/unit/queries/sf
-    plus the adjudicated ``box_load_ok`` and the non-anchor extended
-    timings), nothing that grows with stamps. Error DETAILS stay on
-    the diagnostic line; here failures are sorted name lists, so even
-    the all-18-failing worst case stays inside the byte budget."""
+    plus ``box_load_ok`` and the non-anchor extended timings), the
+    fixed-size load/steal/probe context, nothing that grows with
+    stamps. Error DETAILS stay on the diagnostic line; here failures
+    are sorted name lists, so even the all-18-failing worst case stays
+    inside the byte budget."""
+    steal = diag.get("cpu_steal") or {}
+    steal_headline = diag.get("cpu_steal_headline") or {}
     compact = {
         "metric": diag["metric"],
         "value": diag["value"],
@@ -103,71 +105,31 @@ def compact_record(diag: dict) -> dict:
         "sf": diag["sf"],
         "runs_per_query": diag["runs_per_query"],
         "box_load_ok": diag["box_load_ok"],
-        # run-level load stamps (fixed-size, ~90 bytes): without them
-        # an above-band driver artifact with box_load_ok true could
-        # not be adjudicated from the compact line at all — bench_trend
-        # needs start load + final loadavg to tell external load from
-        # a real regression (review r14). .get(): adjudication-optional,
-        # so a stamp-less synthetic diag still compacts.
+        # Recorded context, all fixed-size (~250 bytes together), so
+        # a driver-parsed record carries the box state it ran under.
+        # .get(): a stamp-less synthetic diag still compacts.
+        # Run-level load and idle-gate stamps:
         "load_1m_at_start": diag.get("load_1m_at_start"),
         "loadavg_final": diag.get("loadavg_final"),
         "box_load_threshold_1m": diag.get("box_load_threshold_1m"),
-        # settle stamps (r14 verdict #2): fixed-size, and the driver's
-        # parsed record is what bench_trend adjudicates — without them
-        # an unsettled run could not be graded load_suspect from the
-        # compact line
         "box_settled": diag.get("box_settled"),
         "gate_criterion": diag.get("gate_criterion"),
-        # hypervisor steal over the measured window, % of guest CPU
-        # capacity (round 15): the adjudication signal for host-side
-        # contention no loadavg can see; fixed-size (~20 bytes)
-        "steal_pct": (diag.get("cpu_steal") or {}).get(
-            "steal_pct_of_capacity"
-        ),
-        "steal_pct_demand": (diag.get("cpu_steal") or {}).get(
-            "steal_pct_of_demand"
-        ),
-        # HEADLINE-window steal (ADVICE r15 medium): the whole-span
-        # percentages above dilute a burst concentrated in the
-        # headline loop ~3-5x and can be dominated by one landing in
-        # the extended/child sections; bench_trend adjudicates
-        # above-band HEADLINE readings on THIS window when present.
-        # Fixed-size (~50 bytes).
-        "steal_pct_headline": (diag.get("cpu_steal_headline") or {}).get(
-            "steal_pct_of_capacity"
-        ),
-        "steal_pct_demand_headline": (
-            diag.get("cpu_steal_headline") or {}
-        ).get("steal_pct_of_demand"),
-        # fixed-work host-speed probe [gate-pass, post-headline] (r16):
-        # the one stamp that sees frequency-cap / memory-bandwidth
-        # degradation. Fixed-size (~30 bytes). ADJUDICATING since r17
-        # (r16 verdict #3): bench_trend grades an above-band headline
-        # whose bracketing probe max crosses
-        # bench_constants.CPU_WORK_PROBE_SLOW_SEC as host_slow_suspect.
+        # hypervisor steal, % of guest CPU capacity and of demand, over
+        # the whole measured span and over the headline window alone
+        # (host-side contention no loadavg can see):
+        "steal_pct": steal.get("steal_pct_of_capacity"),
+        "steal_pct_demand": steal.get("steal_pct_of_demand"),
+        "steal_pct_headline": steal_headline.get("steal_pct_of_capacity"),
+        "steal_pct_demand_headline": steal_headline.get("steal_pct_of_demand"),
+        # fixed-work host-speed probe [gate-pass, post-headline]:
         "cpu_work_probe_sec": diag.get("cpu_work_probe_sec"),
-        # the fresh child's own probe (~10 bytes) — adjudicates the
-        # fresh extended section the same way
-        "extended_fresh_cpu_work_probe_sec": diag.get(
-            "extended_fresh_cpu_work_probe_sec"
-        ),
         "extended_queries": diag["extended_queries"],
-        # era stamp for bench_trend's band dispatch (fresh-order vs
-        # the legacy after-headline ranges)
-        "extended_order": diag.get("extended_order"),
-        "extended_queries_postheadline": diag.get(
-            "extended_queries_postheadline"
-        ),
         "diagnostics": "full record on preceding stdout line",
     }
     if diag.get("errors"):
         compact["failed"] = sorted(diag["errors"])
     if diag.get("extended_errors"):
         compact["extended_failed"] = sorted(diag["extended_errors"])
-    if diag.get("extended_postheadline_errors"):
-        compact["extended_postheadline_failed"] = sorted(
-            diag["extended_postheadline_errors"]
-        )
     # Runtime budget guard: the byte-budget test pins the default
     # HEADLINE/EXTENDED shapes, but SPARK_GRAFT_BENCH_SET=all sweeps
     # the whole registry, and its 171-entry queries dict (~6 KB) — or
@@ -176,14 +138,7 @@ def compact_record(diag: dict) -> dict:
     # the r13 truncation. Degrade, never overflow: replace the
     # unbounded collections with a count (the full record on the
     # PRECEDING line keeps the detail) until the line fits.
-    for victim in (
-        "queries",
-        "failed",
-        "extended_queries",
-        "extended_failed",
-        "extended_queries_postheadline",
-        "extended_postheadline_failed",
-    ):
+    for victim in ("queries", "failed", "extended_queries", "extended_failed"):
         if len(json.dumps(compact).encode()) <= FINAL_LINE_BUDGET_BYTES:
             break
         if isinstance(compact.get(victim), (dict, list)) and compact[victim]:
@@ -235,8 +190,8 @@ def wait_for_idle(
     Returns a dict with the stamped record: ``load_trajectory_1m``,
     ``load_trajectory_5m``, ``waited_sec``, and ``gate_criterion``
     (``"1m_and_5m_idle"`` | ``"1m_idle_settled"`` |
-    ``"cap_exhausted"``) so ``tools/bench_trend.py`` can grade an
-    unsettled (cap-exhausted) run ``load_suspect`` mechanically.
+    ``"cap_exhausted"``) so an unsettled (cap-exhausted) run says so in
+    its own record.
     Comparisons use the ROUNDED samples so the stamped trajectory and
     the adjudicated booleans can't disagree at the boundary.
     ``sample`` (returning an ``os.getloadavg()``-shaped triple) and
@@ -316,27 +271,13 @@ def _measure_set(
     return times, errors, load_1m
 
 
-# Steal helpers live in engine-free bench_constants (shared with
-# tools/ab_compare.py, which must not import the registry chain —
-# ADVICE r13); thin aliases keep bench-internal call sites readable.
-# Why the stamp exists: hypervisor-denied cycles are the one form of
-# external load no loadavg/idle-gate stamp can see (measured live in
-# round 15: clean gate, start load 0.2, zero competing guest
-# processes — and the headline read 39.8 s, 3.5x the band, while a
-# 32-core burn probe showed 8.2% of guest capacity stolen). Stamped
-# as a delta across the measured window so tools/bench_trend.py can
-# adjudicate such a run mechanically.
-from bench_constants import read_cpu_steal as _read_cpu_steal  # noqa: E402
-from bench_constants import steal_record as _steal_record  # noqa: E402
-
-
 def cpu_work_probe(reps: int = 3, mb: int = 256) -> float:
     """Min-of-``reps`` seconds for a FIXED unit of engine-independent
     work: memset ``mb`` MiB (memory-bandwidth-bound) + sha256 over it
     (per-core-compute-bound), both C-speed with the GIL released.
 
     Round 16 observed the failure mode this exists for: a headline
-    total of 17.5 s (1.36x the band edge) on 0.18% headline-window
+    total of 17.5 s (1.36x its clean baseline) on 0.18% headline-window
     steal — the host degraded the guest's effective speed (frequency
     cap / memory-bandwidth contention) in a way NO steal or loadavg
     stamp can see; only a lucky warm-up-arrival load sample caught it.
@@ -344,9 +285,8 @@ def cpu_work_probe(reps: int = 3, mb: int = 256) -> float:
     engine-free, so the stamped seconds track the box's effective
     speed and nothing else. Like steal, it is self-masking-safe: an
     engine regression cannot slow a probe that never touches the
-    engine. Stamped before and after the headline loop (and inside
-    the fresh child); recorded-only until enough rounds of provenance
-    exist to band it."""
+    engine. Stamped before and after the headline loop as recorded
+    context; ``perfbench/run.py`` stamps it too."""
     import hashlib
 
     best = math.inf
@@ -377,99 +317,7 @@ def _reps_from_env() -> int:
         return 3
 
 
-def _extended_fresh_child() -> None:
-    """``python bench.py --extended-fresh`` — the r14-verdict-#4
-    child: measure the extended heavies in their OWN fresh JVM, so
-    the primary extended numbers stop riding on Spark's in-JVM
-    accumulated self-load (the reason the r13/r14 observed ranges
-    were ±30% wide). The parent runs this child AFTER its own
-    sections — the before-headline ordering was measured to perturb
-    the headline anchor (see main()) — and passes the names via
-    $SPARK_GRAFT_BENCH_EXTENDED; the child prints ONE JSON line —
-    ``{"extended_queries", "extended_errors",
-    "extended_load_1m_per_query"}`` — on a single stdout line the
-    parent parses. Same warm-up + min-of-N protocol as every other
-    measured section (``_measure_set``)."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    names = [n for n in os.environ.get("SPARK_GRAFT_BENCH_EXTENDED", "").split(",") if n]
-    reps = _reps_from_env()
-    steal0 = _read_cpu_steal()
-    calib = cpu_work_probe()
-    _load_all()
-    spark = get_spark(app_name="mrs-bench-ext")
-    spark.sparkContext.setLogLevel("FATAL")
-    warm_sf = "/root/testdata/sf0.001"
-    for name in names:
-        try:
-            REGISTRY[name].builder(spark, warm_sf).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception:
-            pass
-    jvm_gc = spark.sparkContext._jvm.System.gc  # noqa: SLF001
-    times, errors, load_1m = _measure_set(spark, names, sf_dir, reps, jvm_gc)
-    out = {
-        "extended_queries": times,
-        "extended_load_1m_per_query": load_1m,
-        "cpu_steal": _steal_record(steal0, _read_cpu_steal()),
-        "cpu_work_probe_sec": calib,
-    }
-    if errors:
-        out["extended_errors"] = errors
-    print(json.dumps(out))
-
-
-def _extended_fresh_subprocess(
-    names: list[str], reps: int
-) -> tuple[
-    dict[str, float],
-    dict[str, str],
-    dict[str, list[float]],
-    dict | None,
-    float | None,
-]:
-    """Run the fresh-JVM extended child and parse its one-line JSON.
-    Failure-isolated like every measured section: a crashed or
-    unparseable child records a synthetic ``_fresh_jvm`` error and
-    never touches the headline anchor."""
-    import subprocess
-
-    env = dict(os.environ)
-    env["SPARK_GRAFT_BENCH_EXTENDED"] = ",".join(names)
-    env["SPARK_GRAFT_BENCH_REPS"] = str(reps)
-    try:
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--extended-fresh"],
-            env=env,
-            capture_output=True,
-            text=True,
-            timeout=1800,
-        )
-        for line in reversed(proc.stdout.strip().splitlines()):
-            line = line.strip()
-            if line.startswith("{"):
-                rec = json.loads(line)
-                return (
-                    rec.get("extended_queries", {}),
-                    rec.get("extended_errors", {}),
-                    rec.get("extended_load_1m_per_query", {}),
-                    rec.get("cpu_steal"),
-                    rec.get("cpu_work_probe_sec"),
-                )
-        raise ValueError(
-            f"no JSON line in child stdout (rc={proc.returncode}, "
-            f"stderr tail: {proc.stderr[-200:]!r})"
-        )
-    except Exception as exc:  # noqa: BLE001 — record and continue
-        msg = f"{type(exc).__name__}: {exc}"
-        print(f"bench: extended fresh-JVM child FAILED: {msg}", file=sys.stderr)
-        return {}, {"_fresh_jvm": msg[:300]}, {}, None, None
-
-
 def main() -> None:
-    if "--extended-fresh" in sys.argv[1:]:
-        _extended_fresh_child()
-        return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     # External-load reading taken BEFORE any Spark work (r11 verdict
@@ -516,12 +364,12 @@ def main() -> None:
     reps = _reps_from_env()
     # steal window opens AFTER the idle gate (steal during an idle
     # wait is ~0 by construction and would only dilute the percentage)
-    steal0 = _read_cpu_steal()
+    steal0 = read_cpu_steal()
     # effective-host-speed probe (r16): fixed engine-free work timed at
     # gate-pass — the only stamp that sees frequency-cap / memory-
     # bandwidth degradation (observed live: 1.36x headline on 0.18%
-    # steal). Recorded-only until banded; a second reading after the
-    # headline shows whether the box's speed CHANGED during the run.
+    # steal). A second reading after the headline shows whether the
+    # box's speed CHANGED during the run.
     calib_pre = cpu_work_probe()
     spark = get_spark(app_name="mrs-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -558,69 +406,27 @@ def main() -> None:
     # samples discriminate is a NONZERO BASELINE before the first
     # query and between-queries floors well above the core count.
     times, errors, load_1m = _measure_set(spark, headline, sf_dir, reps, jvm_gc)
-    # HEADLINE-window steal record, closed right here (ADVICE r15
-    # medium): the run-level window below spans the whole measured
-    # span (headline + postheadline + fresh child), of which the
-    # headline loop is a minority — a host-steal burst landing only in
-    # the extended sections could grade a genuine above-band headline
-    # regression load_suspect, and a burst concentrated IN the
-    # headline is diluted ~3-5x by the rest of the span and may miss
-    # the thresholds (the same dilution the child's own stamp fixes
-    # for the fresh section). Window = idle gate -> end of the
-    # headline loop; it deliberately includes session creation and the
-    # warm-up pass — denial there perturbs the same section this stamp
-    # adjudicates. tools/bench_trend.py grades above-band HEADLINE
-    # readings on THIS window when present, keeping the whole-span
-    # stamp on the artifact for the extended sections and provenance.
-    cpu_steal_headline = _steal_record(steal0, _read_cpu_steal())
+    # HEADLINE-window steal record, closed right here: the run-level
+    # window below also spans the extended section, which would dilute
+    # (or dominate) a burst that landed in the headline loop. Window =
+    # idle gate -> end of the headline loop, including session creation
+    # and the warm-up pass.
+    cpu_steal_headline = steal_record(steal0, read_cpu_steal())
     calib_post = cpu_work_probe()
-    # SECONDARY extended trend: the legacy after-headline order, kept
-    # so the r13/r14 observed ranges stay comparable while the fresh-
-    # order bands accumulate provenance (r14 verdict #4 "keep the
-    # after-headline numbers as a secondary trend"). The headline
-    # anchor section sees the same JVM history it has since round 10
-    # — warm-up then the 18 headline queries, FIRST measured thing in
-    # the process.
-    ext_post_times, ext_post_errors, ext_post_load = _measure_set(
+    # Non-anchor extended section, same JVM, right after the headline:
+    # the headline stays the first measured thing in the process, as it
+    # has been since round 10.
+    ext_times, ext_errors, ext_load = _measure_set(
         spark, extended, sf_dir, reps, jvm_gc
     )
-    # PRIMARY extended measurement LAST, in its own fresh JVM (r14
-    # verdict #4): a fresh JVM is what kills the ±30% in-JVM
-    # accumulated-self-load noise of the legacy section (heap/GC/code-
-    # cache state — the physical mechanism), independent of where in
-    # the run it executes. The verdict's child-BEFORE-headline variant
-    # was implemented first and measured HARMFUL on quiet-box pairs
-    # (child-first headline 14.08 s vs 12.62 s headline-only minutes
-    # apart, steal stamps low on both): a heavy child finishing
-    # seconds before the headline warm-up re-creates the exact
-    # just-finished-job drain the r14 13.78 s incident demonstrated
-    # and the settle gate exists to prevent — with no gate in
-    # between. Running the child AFTER the parent's sections has no
-    # such mechanism (the parent's JVM is idle while it waits), and
-    # the child stamps its own steal window for adjudication.
-    ext_fresh_times: dict[str, float] = {}
-    ext_fresh_errors: dict[str, str] = {}
-    ext_fresh_load: dict[str, list[float]] = {}
-    ext_fresh_steal: dict | None = None
-    ext_fresh_calib: float | None = None
-    if extended:
-        (
-            ext_fresh_times,
-            ext_fresh_errors,
-            ext_fresh_load,
-            ext_fresh_steal,
-            ext_fresh_calib,
-        ) = _extended_fresh_subprocess(extended, reps)
 
     spark.sparkContext.setLogLevel("ERROR")
     total = round(sum(times.values()), 3)
-    # close the steal window over the whole measured span (child +
-    # headline + postheadline) — hypervisor-denied cycles are the one
-    # external load no guest loadavg stamp can see (round 15: a clean-
-    # gate run read 3.5x the band while the host stole 8.2% of
-    # capacity). Cannot be self-caused, so bench_trend may threshold
-    # it without the ADVICE-r14 self-masking failure mode.
-    cpu_steal = _steal_record(steal0, _read_cpu_steal())
+    # steal window over the whole measured span (headline + extended):
+    # hypervisor-denied cycles are the one external load no guest
+    # loadavg stamp can see (round 15: 8.2% of capacity stolen on a
+    # clean-gate run). Recorded context, like every load stamp.
+    cpu_steal = steal_record(steal0, read_cpu_steal())
     out = {
         "metric": "headline_queries_total_sec",
         # A partial total compares unlike sets across rounds, so when
@@ -636,27 +442,19 @@ def main() -> None:
         # Self-describing comparability. Since round 10 each query is
         # the MIN over ``runs_per_query`` same-JVM runs (the sweep's
         # protocol) — totals are NOT comparable to the single-run
-        # figures of BENCH_r01..r09, whose fresh-JVM spread on
-        # identical code was 13.94-16.45 s on an idle box and 19.75 s
-        # in a loaded round-9 session (the r9 +24.7% the protocol
-        # change exists to kill). ``single_run_era`` preserves those
-        # reference numbers; within the min-of-N era, treat residual
-        # per-query deltas under ~1.3x between rounds as box state —
-        # only interleaved same-JVM A/Bs attribute a cross-variant
-        # difference.
+        # figures of BENCH_r01..r09. Cross-round totals are box state
+        # as much as code: only paired runs (``perfbench/compare.py``,
+        # ``tools/ab_compare.py``) attribute a difference to a change.
         "runs_per_query": reps,
         "protocol": (
             f"min of {reps} same-JVM runs per query after a full "
             f"sf0.001 warm-up pass; gc.collect + JVM System.gc "
             f"between runs"
         ),
-        "noise_band_ref": "SCALING.md#noise-band",
         # per-query [before, after] 1-minute loadavg samples plus the
-        # full (1m, 5m, 15m) triple at artifact time: a driver-graded
-        # total outside the idle spread should be adjudicated from
-        # THESE fields (elevated pre-first-query baseline / 15m
-        # average ≫ what this bench alone would drive), not by
-        # cross-referencing three artifacts as in round 10.
+        # full (1m, 5m, 15m) triple at artifact time: the box state a
+        # reader needs to interpret the total, without cross-
+        # referencing other artifacts.
         "load_1m_per_query": load_1m,
         "loadavg_final": [round(x, 2) for x in os.getloadavg()],
         # Self-ADJUDICATING box-load verdict (r11 verdict #4 — raw
@@ -695,66 +493,30 @@ def main() -> None:
             "poll_sec": IDLE_WAIT_POLL_SEC,
             **gate,
         },
-        # the idle-box band on headline-identical code — run
-        # provenance and maintenance rules live on the constant
-        # (bench_constants.ANCHOR_BAND_MIN_OF_3_SEC; twelve runs as of
-        # round 15, absorbing per-round DATA regimes as well as box
-        # state). Totals outside this band on code-identical headline
-        # files indicate box load or a new data regime, not
-        # regression. This band is also the min-of-3-era ANCHOR the
-        # 2x bar compares against (BASELINE.md "Bench anchor,
-        # min-of-3 era"): the single-run 18.444 s anchor includes
-        # noise min-of-3 removes, so ratios against it flatter ~18%.
         "cpu_steal": cpu_steal,
         "cpu_steal_headline": cpu_steal_headline,
-        "extended_fresh_cpu_steal": ext_fresh_steal,
-        "extended_fresh_cpu_work_probe_sec": ext_fresh_calib,
         # fixed-work host-speed probe (r16), [gate-pass, post-headline]:
         # identical work, so a rise between the two means the box's
         # effective speed DEGRADED during the run — the signal steal
-        # cannot see. Child's own reading rides in its section.
+        # cannot see.
         "cpu_work_probe_sec": [calib_pre, calib_post],
-        "min_of_3_fresh_jvm_spread_sec": list(ANCHOR_BAND_MIN_OF_3_SEC),
-        "anchor_ref": "BASELINE.md#new-engine-targets-driver-contract",
-        "single_run_era": {
-            "rounds": "r01-r09",
-            "fresh_jvm_total_spread_sec": [13.94, 16.45],
-            "loaded_box_session_total_sec": 19.75,
-        },
     }
     if errors:
         out["errors"] = errors
     # Non-anchor trend section (r12 verdict #4): same min-of-N
     # protocol; NOT in "value" and its failures never null the anchor
     # total — the headline set stays the frozen 18 so totals compare
-    # like sets. Since r15 the PRIMARY numbers come from the fresh-JVM
-    # before-headline child (r14 verdict #4) and the legacy after-
-    # headline order rides along as the secondary trend; the
-    # ``extended_order`` stamp is what tools/bench_trend.py dispatches
-    # its band choice (fresh vs legacy) on.
-    out["extended_queries"] = ext_fresh_times
-    out["extended_order"] = "fresh_jvm_after_headline"
+    # like sets. Per-query [before, after] load samples too (r13
+    # verdict #3: pagerank's 1.34x-vs-idle driver point was
+    # unexplainable because these samples were measured then dropped).
+    out["extended_queries"] = ext_times
     out["extended_note"] = (
-        "non-anchor sf-dir trend for the sweep heavies; excluded "
-        "from 'value' and from the min_of_3_fresh_jvm_spread_sec "
-        "anchor band; measured in its own fresh JVM since r15 — "
-        "after the parent's sections, so the headline keeps its "
-        "r10-r14 position (the postheadline section keeps the "
-        "legacy same-JVM order as a secondary trend)"
+        "non-anchor sf-dir trend for the sweep heavies; same JVM, "
+        "measured after the headline; excluded from 'value'"
     )
-    # per-query [before, after] load for the extended sections too
-    # (r13 verdict #3): the postheadline one runs LAST, on the most-
-    # loaded box state of the whole run (r13: loadavg 5.6-7.0 by
-    # then; pagerank's 1.34x-vs-idle driver point was unexplainable
-    # from the artifact alone because these samples were measured and
-    # then discarded).
-    out["extended_load_1m_per_query"] = ext_fresh_load
-    if ext_fresh_errors:
-        out["extended_errors"] = ext_fresh_errors
-    out["extended_queries_postheadline"] = ext_post_times
-    out["extended_postheadline_load_1m_per_query"] = ext_post_load
-    if ext_post_errors:
-        out["extended_postheadline_errors"] = ext_post_errors
+    out["extended_load_1m_per_query"] = ext_load
+    if ext_errors:
+        out["extended_errors"] = ext_errors
     # Two-line artifact (r13 verdict #1): full diagnostic record
     # first, compact budget-capped record LAST — the driver's ~2,000-
     # char stdout tail capture must always contain the whole final

@@ -8,15 +8,16 @@ on ``tools/ab_compare.py``). Constants shared across measurement tools
 live here instead; ``bench.py`` re-exports them so existing
 ``bench.BOX_LOAD_THRESHOLD_1M`` readers keep working and the
 single-source-of-truth test (``tests/test_ab_compare.py``) still pins
-the two views equal.
+the two views equal. ``perfbench/`` imports ``HEADLINE`` and the steal
+helpers from here (pinned by ``tests/test_root_imports.py``).
 """
 
 #: Headline set: reference-app parity + the heavy relational /
 #: window / dedup / similarity representatives. Frozen since round 10
-#: so cross-round anchor totals compare like sets. Lives here (not in
-#: bench.py) since r16 so ``tools/freshness_check.py``'s
-#: mandatory-ABBA gate (r15 verdict #2) can know which queries feed
-#: the anchor without importing the engine.
+#: so totals compare like sets. Lives here (not in bench.py) so
+#: ``tools/freshness_check.py``'s mandatory-ABBA gate and
+#: ``perfbench/`` can know which queries feed the headline without
+#: importing the engine.
 HEADLINE = [
     "wc_word_count",
     "grep_docs",
@@ -66,485 +67,10 @@ BOX_LOAD_THRESHOLD_1M = 2.0
 #: scale too) OR ``IDLE_SETTLE_MIN_SEC`` elapsed since the wait
 #: trajectory's last above-threshold 1m sample (bounded settle when
 #: the 5m average would take too long to decay). ``bench.py`` stamps
-#: which criterion gated (``gate_criterion``) so
-#: ``tools/bench_trend.py`` can grade an unsettled run
-#: ``load_suspect`` mechanically.
+#: which criterion gated (``gate_criterion``), so an unsettled run is
+#: visible in its own record.
 BOX_LOAD_THRESHOLD_5M = 2.0
 IDLE_SETTLE_MIN_SEC = 120.0
-
-#: Host-steal adjudication threshold (round 15): this box is a VM,
-#: and the HOST can deny it cycles ("steal" time, /proc/stat field 8)
-#: in ways no loadavg stamp can see — measured live in round 15:
-#: guest start-load 0.2, gate clean, yet a 32-core burn probe showed
-#: 8.2% of guest CPU capacity stolen and the headline read 39.8 s
-#: (3.5x) on code whose prior run graded in-band. ``bench.py`` stamps
-#: the steal delta across the measured window; an above-band reading
-#: with steal >= this % of capacity is ``load_suspect`` (external).
-#: Unlike the retired end-of-run loadavg check (ADVICE r14), steal
-#: CANNOT be self-caused: a code regression burns guest cycles, it
-#: does not make the host deny them — so thresholding it has no
-#: self-masking failure mode. Idle-host baseline reads ~0.1%;
-#: 2.0% of a 32-cpu capacity over a ~6-min run is ~230 denied
-#: cpu-seconds, far beyond background flutter.
-STEAL_SUSPECT_PCT = 2.0
-
-#: Companion threshold on steal as % of DEMAND (denied /
-#: (granted + denied)): the capacity percentage dilutes denial by the
-#: span's idle phases — a run that bursts 32-wide for a fraction of
-#: its span can lose >5% of the cycles it actually asked for while
-#: capacity-steal reads 1.7% (observed live in r15: a 13.84 s
-#: above-band headline, launch probe 0.01%, 135 cpu-sec denied
-#: mid-run). Demand-steal is self-masking-safe in the conservative
-#: direction: a guest regression grows the denominator and LOWERS
-#: the percentage, so a regression can only become MORE visible.
-STEAL_SUSPECT_DEMAND_PCT = 2.0
-
-#: Host-speed probe SUSPECT threshold (r16 verdict #3): above this,
-#: the fixed-work probe (``bench.cpu_work_probe_sec`` — memset 256
-#: MiB + sha256, min-of-3, engine-free) says the box's effective
-#: speed is degraded in the way NO steal or loadavg stamp can see
-#: (frequency cap / memory-bandwidth denial — the r16 episode's
-#: 17.506 s clean-stamped run). ``tools/bench_trend.py`` grades an
-#: above-band reading whose bracketing probe maximum crosses this
-#: threshold ``host_slow_suspect`` (box state, like load_suspect).
-#: Self-masking-safe: an engine regression cannot slow a probe that
-#: never touches the engine. CALIBRATION (every point committed):
-#:   clean, quiet-hunt builder sessions (r16, in-band/recovery runs
-#:   12.861/11.885/11.325): pre 0.3917/0.3853/0.3833, post-headline
-#:   0.3681/0.3716/0.3689, child 0.3805/0.3755/0.3751
-#:     (BENCH_LOCAL_r16.json + the recovery pair, evidence/r16/)
-#:   clean, r16 DRIVER session (11.566 s — best driver total ever):
-#:   pre 0.3887, post 0.3955 (BENCH_r16.json) — driver-session
-#:   probes read ~5% above the builder sessions', which is why the
-#:   threshold sits above the full clean envelope, not its center
-#:   clean, r17 builder sessions (2026-08-16 evening, steal-volatile
-#:   host): every steal-clean window read pre 0.3756-0.3968, post
-#:   0.3615-0.3851, child 0.3764-0.3934 — all under threshold,
-#:   including the immaculate 13.515 primary (BENCH_LOCAL_r17.json:
-#:   [0.3894, 0.3722]); the evening's steal regime was probe-
-#:   invisible except at its peak (below)
-#:   DEGRADED (the episode's only probe-stamped run — 13.348 s at
-#:   3.43% headline demand-steal): pre 0.3953, post 0.4071, child
-#:   0.3865 (evidence/r16/BENCH_LOCAL_r16_episode_13348.json)
-#:   DEGRADED (r17, 16.9 s at 39.33% headline demand-steal): pre
-#:   0.4278 — the probe's second above-threshold reading, taken
-#:   INSIDE a steal storm (evidence/r17/BENCH_LOCAL_r17_steal_16900
-#:   .json); steal adjudicates it first, but the probe agreeing is
-#:   the first cross-validation of the 0.40 threshold
-#: Threshold 0.40 = above every committed clean reading (max 0.3955)
-#: with the one stamped degraded run caught via its post-probe
-#: 0.4071. The adjudicated statistic is the MAX of the bracketing
-#: [gate-pass, post-headline] pair (one slow end means the probed
-#: window overlapped degradation); the verdict's pre-probe-only
-#: phrasing would catch NO committed degraded reading (the degraded
-#: pre, 0.3953, sits 0.05% under the clean driver post, 0.3955 — the
-#: two single-reading populations overlap). Borderline episodes
-#: reading 0.39-0.40 fall through to ``investigate`` — the
-#: conservative direction: a too-low threshold would let ordinary
-#: clean-box probe flutter excuse a REAL above-band regression.
-CPU_WORK_PROBE_SLOW_SEC = 0.40
-
-#: Min-of-3 idle-box fresh-JVM headline-total ANCHOR band (the value
-#: ``bench.py`` stamps as ``min_of_3_fresh_jvm_spread_sec`` and
-#: ``tools/bench_trend.py`` adjudicates against). ELEVEN idle runs on
-#: headline-identical code: 11.90/12.19 s (round-10, back to back),
-#: 11.889 s (r11), 11.862 s (r12), 11.17/10.529 s (r13 pair, after
-#: that round's testdata regeneration — a faster data regime), and
-#: the round-14 post-regeneration QUINTUPLET
-#: 12.364/12.53/11.852/12.245/11.083 s (2026-08-16, freshly-booted
-#: box, start loads 1.26/0.17/0.00/0.00/0.01; one further run was
-#: EXCLUDED as polluted — its own load stamps caught external load
-#: arriving during warm-up). The regime spans the band's upper
-#: region, 11.08-12.53 s. A TWELFTH point (round 15, 2026-08-16
-#: daytime, 6h-churned box): 12.898 s with the strongest cleanliness
-#: evidence any point carries — gate 1m_and_5m_idle, start 0.79,
-#: hypervisor steal 0.28% of capacity / 1.71% of demand — moved the
-#: high edge to 12.90. Same code (zero engine diffs, LOCAL_DIFF_r15
-#: fingerprint-fresh) and same data as the in-band 11.248 s driver
-#: point graded at 07:09 the same day: the box's quiet-window
-#: baseline drifted ~10% between fresh-boot morning and churned
-#: afternoon (a headline-only control read 12.617 minutes earlier;
-#: five steal-suspect runs 13.3-16.5 bracket the same baseline plus
-#: denial — full incident in SCALING.md#noise-band). The band
-#: absorbs per-round DATA regimes and box state; within one regime
-#: the spread is ~3-13% (the r14 regime's three clean-start points
-#: alone span 11.08-12.25 — the old ~3-6% figure came from
-#: two-point pairs and underestimated it). Maintained edge-by-edge
-#: with provenance, never point-to-point (SCALING.md#noise-band).
-#: ROUND-16 high-edge move 12.90 -> 13.98, the first under the
-#: codified two-clean-points rule below. The round-16 session ran on
-#: the same box, same code (zero engine diffs since the r15-audited
-#: tree) and same testdata (regenerated 01:40, BEFORE every r15
-#: measurement) — and the quiet-window hunter (tools/quiet_hunt.py)
-#: collected a six-run cohort showing the host in a day-long
-#: degradation episode: 14.711 s at 13.5% demand-steal, 13.285 s at
-#: 2.8% headline-window demand-steal, probe windows up to 21%
-#: demand-steal, and one 17.506 s reading whose steal stamps were
-#: CLEAN (0.18% demand) — stamp-invisible degradation (frequency cap
-#: or memory-bandwidth denial), caught only by the first-headline-
-#: query pre-sample (3.36) and motivating the ``cpu_work_probe_sec``
-#: stamp added the same day. Within that episode, two runs passed
-#: EVERY stamp (gate criterion, start load, first-query pre-sample,
-#: headline-window steal): 13.062 s (headline steal 0.28%/1.95%) and
-#: 13.975 s (0.28%/1.95%). With r15's 12.898 that is three clean
-#: points above the 12.53 stable edge; the edge moves to cover the
-#: maximum. The regression-detection duty this widening would
-#: otherwise erode moved in the same round to the mandatory
-#: interleaved-ABBA gate for headline-touching diffs
-#: (tools/freshness_check.py::ab_gate_findings).
-#: --- r17 RE-ANCHOR (code era, not an edge move) ------------------
-#: Everything in the long provenance block above describes the
-#: r10-r16 ENGINE's band, retired to ANCHOR_BAND_PRE_R17OPT_SEC
-#: below (same values, frozen). Round 17 was the first OPTIMIZATION
-#: round: the headline code itself changed (integer-cents money
-#: aggregation, table-handle cache, pinned expansion/window
-#: exchanges, PageRank per-vertex decimal cast, rebalanced
-#: single-row-group scans — OPTIMIZATION_r17.md), so the band is
-#: re-SEEDED, the same act as the r13/r14 original seeding, not an
-#: edge move against the old stable edge. Seed cohort (quiet_hunt,
-#: 2026-08-18, evidence/r17/HUNT_r17opt.jsonl — the whole session
-#: sat inside a documented external-load/steal episode; 0 of 12
-#: attempts produced an immaculate stamp set):
-#:   7.618 — attempt 1 (the committed primary BENCH_LOCAL_r17.json):
-#:     gate 1m_and_5m_idle, box_load_ok, headline-window steal
-#:     0.29%/1.72% (both under the 2.0 thresholds), probes
-#:     [0.3315, 0.3473] — disqualified from "immaculate" only by a
-#:     2.38 first-query pre-sample (warm-up residue of the prior
-#:     pytest run, not host state).
-#:   8.399 — attempt 8 (evidence/r17/BENCH_LOCAL_r17opt_support_8399
-#:     .json): headline window 0.27%/1.68%, probes [0.3489, 0.3346],
-#:     pre-sample 2.57 — same pattern.
-#:   8.050 — second hunt session same night (attempt 3,
-#:     evidence/r17/BENCH_LOCAL_r17opt_support_8050.json): the
-#:     cleanest headline window of all ten runs (0.13%/0.82%), gate
-#:     1m_and_5m_idle, probes [0.3622, 0.3605]; pre-sample 3.32 —
-#:     the external load kept every pre-sample hot. A fourth point,
-#:     7.596 @ 0.53%/3.11% (mildly over the demand threshold), also
-#:     lands in-band (…_nearclean_7596.json). Three sub-threshold
-#:     points across two sessions now support the seeded edges.
-#: EXCLUDED as episode outliers (headline demand-steal far over
-#: threshold): 8.804 @ 7.32%, 9.843 @ 5.0%, 8.343 @ 6.94%,
-#: 9.254 @ 8.82% — note the total tracks the steal monotonically,
-#: which is the episode signature, not plan variance. Both edges are
-#: PROVISIONAL in the r15 sense: the next quiet-box session must
-#: corroborate or re-pin them (top r18 evidence task). Low edge
-#: 6.80 ≈ 0.9× the cleanest point (below_band is recorded-only
-#: maintenance); high edge 8.48 = 1.01× the 8.399 support point.
-ANCHOR_BAND_MIN_OF_3_SEC = [6.80, 8.48]
-
-#: Edge-move discipline (r15 verdict #1, codified): an ANCHOR_BAND
-#: edge may only move when at least ``ANCHOR_EDGE_MIN_CLEAN_POINTS``
-#: clean-stamp runs (gate passed on a criterion, steal under both
-#: thresholds) land in the new region — beyond the previous stable
-#: edge. Until then the moved edge is PROVISIONAL: it still grades
-#: (a band that under-covers would flag known-clean readings), but
-#: the next quiet-window run must either corroborate it (append the
-#: point to the support list; the flag clears mechanically) or
-#: retract it (clear the support list and restore
-#: ``ANCHOR_HIGH_EDGE_STABLE_SEC``, recording the orphan point as an
-#: excluded outlier in the provenance above). The rule is pinned in
-#: ``tests/test_bench_contract.py``: the high edge must equal the
-#: stable edge unless the support list is non-empty, the edge must
-#: cover every support point within rounding, and the provisional
-#: flag must be exactly ``len(support) < MIN`` — so an edge cannot
-#: ratchet on single near-threshold points without the constant
-#: visibly saying so (ADVICE r15: the r15 high-edge move, the
-#: containment 1.99 and fresh-pagerank 7.10 moves each rested on ONE
-#: point collected during the round-15 host-contention incident).
-ANCHOR_EDGE_MIN_CLEAN_POINTS = 2
-#: the last edge supported by >=2 clean points from a HEALTHY-host
-#: regime. r17 era seed: no immaculate point exists yet (see the
-#: re-anchor block), so the stable edge IS the seeded high edge and
-#: the support list is empty — the first two clean-stamp runs above
-#: it move it under the normal rule. (Pre-r17 engine value: 12.53,
-#: the r14 quintuplet's maximum — archived with the retired band.)
-ANCHOR_HIGH_EDGE_STABLE_SEC = 8.48
-#: clean-stamp runs above the stable edge supporting the current high
-#: edge, in evidence-quality order:
-#:   12.861 — r16, the committed BENCH_LOCAL_r16.json: headline-window
-#:     steal 0.02%/0.15%, first-query pre-sample 1.46 — the cleanest
-#:     full run ever stamped, landing 0.3% under r15's 12.898 and
-#:     CONFIRMING the churned-box ~12.86-12.90 quiet baseline (the
-#:     r15-verdict ask: a second clean point for the 12.90 region).
-#:   12.898 — r15 (gate 1m_and_5m_idle, start 0.79, steal 0.28%/1.71%).
-#:   13.062 / 13.975 — r16 pair, committed as
-#:     evidence/r16/BENCH_LOCAL_r16_support_*.json: every stamp
-#:     clean (gate,
-#:     pre-samples 1.81/1.84, headline-window steal 0.28%/1.95% each)
-#:     but measured DURING the documented degradation episode with
-#:     demand-steal at 97.5% of the suspect threshold — the top of
-#:     the observed clean envelope, not its center. Full cohort:
-#:     evidence/r16/HUNT_r16.jsonl + SCALING.md#noise-band. A
-#:     post-episode
-#:     recovery PAIR (evidence/r16/BENCH_LOCAL_r16_recovery_*.json:
-#:     11.885 and
-#:     11.325 s, headline windows 0.01%/0.06% each) read squarely
-#:     inside the healthy r14 regime on the same code+data ~40 min
-#:     later — the episode was host state end to end.
-#:   13.515 — r17 (2026-08-16 evening, quiet-hunt attempt 16,
-#:     committed then as the round primary, now evidence/r17/BENCH_LOCAL_r17_preopt_13515.json): the FIRST
-#:     NON-episode immaculate point in the 13.0-14.0 region — gate
-#:     1m_and_5m_idle, start 1.45, pre-sample 1.77, headline window
-#:     0.1%/0.7%, probes [0.3894, 0.3722] under the r17 threshold.
-#:     Measured the same evening as an 11.764 and an 11.921 on the
-#:     same code: the one-evening clean spread 11.76-13.52 is HOST
-#:     variance, not episode residue — the strongest evidence yet
-#:     that the widened edge describes this host's real clean
-#:     envelope (and why the retirement rule's trigger should stay
-#:     strict: contraction to ~12.9 would have flagged this clean
-#:     reading as investigate).
-#: (r17 era: empty — the seed points are band-definition provenance,
-#: not post-seed edge-move support. Pre-r17 engine list at freeze:
-#: [12.861, 12.898, 13.062, 13.515, 13.975] — the 13.515 primary now
-#: lives at evidence/r17/BENCH_LOCAL_r17_preopt_13515.json.)
-ANCHOR_HIGH_EDGE_SUPPORT_SEC = []
-ANCHOR_HIGH_EDGE_PROVISIONAL = (
-    len(ANCHOR_HIGH_EDGE_SUPPORT_SEC) < ANCHOR_EDGE_MIN_CLEAN_POINTS
-)
-
-#: Edge-RETIREMENT discipline (r16 verdict #2 — the contraction twin
-#: of the edge-move rule; until r17 the band could only ever widen,
-#: so every host episode would permanently ratchet it). Support
-#: points collected DURING a documented host-degradation episode
-#: (listed below; the r16 pair was measured at 97.5%-of-threshold
-#: demand-steal, and the same episode produced a 17.5 s run whose
-#: steal stamps were clean — 'stamp-clean' does not certify host
-#: health inside such an episode, ADVICE r16 medium) retire to
-#: provenance-only once the box demonstrates sustained health: at
-#: least ``ANCHOR_EDGE_RETIRE_MIN_CLEAN_POINTS`` CONSECUTIVE
-#: clean-stamp headline totals (gate passed on a criterion, steal
-#: under both thresholds on the headline window, host-speed probe —
-#: where stamped — under ``CPU_WORK_PROBE_SLOW_SEC``), spanning at
-#: least ``ANCHOR_EDGE_RETIRE_MIN_SESSIONS`` distinct measurement
-#: sessions, every one at or below ``ANCHOR_HIGH_EDGE_STABLE_SEC``.
-#: "Consecutive" counts clean-stamp runs only (a steal-polluted run
-#: is excluded from the sequence by definition — it says nothing
-#: about the healthy baseline); a CLEAN run above the stable edge
-#: resets the chain (the churned-box ~12.9 baseline is real and
-#: must keep its non-episode support points). When the rule fires,
-#: the episode points move from ``ANCHOR_HIGH_EDGE_SUPPORT_SEC`` to
-#: provenance-only and the high edge recomputes from the remaining
-#: support (or reverts to the stable edge if none remain).
-ANCHOR_EDGE_RETIRE_MIN_CLEAN_POINTS = 4
-ANCHOR_EDGE_RETIRE_MIN_SESSIONS = 2
-#: the episode-collected subset of the support points, with their
-#: retirement state tracked by the test via ANCHOR_EDGE_RETIREMENT_MET
-#: (r17 era: empty; pre-r17 engine value at freeze: [13.062, 13.975].)
-ANCHOR_HIGH_EDGE_EPISODE_SUPPORT_SEC = []
-#: consecutive clean-stamp headline totals at or below the stable
-#: edge, newest last, as ``[seconds, session-label]`` — the chain the
-#: retirement rule counts. Provenance:
-#:   11.885 / 11.325 — the r16 post-episode recovery pair
-#:     (evidence/r16/BENCH_LOCAL_r16_recovery_*.json), headline
-#:     windows 0.01%/0.06% steal each, probes 0.3833-0.3853 pre /
-#:     0.3689-0.3716 post — immaculate.
-#:   11.566 — the r16 DRIVER run (BENCH_r16.json): rc 0, 18/18,
-#:     box_load_ok, headline window 0.03%/0.2%, probe
-#:     [0.3887, 0.3955] — a separate session, satisfying the
-#:     >=2-sessions requirement.
-#: The r17 run at 17:18 (13.899 s, headline demand-steal 5.64% —
-#: /tmp, not committed) was steal-polluted and is excluded from the
-#: sequence per the rule; it neither extends nor resets the chain.
-#: (r17 era: chain reset with the re-anchor — observations compare
-#: against the NEW stable edge; pre-r17 engine chain at freeze:
-#: [[11.885, r16-builder-quiet-hunt], [11.325, r16-builder-quiet-hunt],
-#: [11.566, r16-driver]].)
-ANCHOR_EDGE_RETIRE_OBSERVATIONS = []
-
-
-def anchor_edge_retirement_met(
-    observations=None,
-    min_points=None,
-    min_sessions=None,
-    stable_edge=None,
-) -> bool:
-    """True when the committed observation chain satisfies the
-    retirement rule. Pure (all inputs injectable) so
-    ``tests/test_bench_contract.py`` pins both the retain and the
-    retire direction on synthetic chains as well as the live
-    constants."""
-    obs = ANCHOR_EDGE_RETIRE_OBSERVATIONS if observations is None else observations
-    mp = ANCHOR_EDGE_RETIRE_MIN_CLEAN_POINTS if min_points is None else min_points
-    ms = ANCHOR_EDGE_RETIRE_MIN_SESSIONS if min_sessions is None else min_sessions
-    edge = ANCHOR_HIGH_EDGE_STABLE_SEC if stable_edge is None else stable_edge
-    return (
-        len(obs) >= mp
-        and len({s for _, s in obs}) >= ms
-        and all(v <= edge for v, _ in obs)
-    )
-
-
-ANCHOR_EDGE_RETIREMENT_MET = anchor_edge_retirement_met()
-
-#: Single-run-era (r01-r09) idle fresh-JVM total spread on identical
-#: code, for grading THOSE artifacts only — a single-run total carries
-#: warm-up/GC noise min-of-3 removes, so comparing eras point-to-band
-#: flatters/penalizes by ~18% (BASELINE.md anchor rows). The loaded-
-#: box session point was 19.75 s.
-SINGLE_RUN_ERA_BAND_SEC = [13.94, 16.45]
-
-#: Observed idle ranges for the non-anchor ``extended_queries``
-#: heavies (r13 verdict #4), same min-of-3 protocol, measured AFTER
-#: the headline loop (so every point carries Spark's own accumulated
-#: self-load — the [before, after] stamps distinguish that from
-#: EXTERNAL load). Eight idle runs: the r13 pair + the pre-regen r14
-#: pair (2026-08-15) + the post-regen r14 QUADRUPLET (2026-08-16; the
-#: regenerated regime reads triangle 4.805/5.10/3.98/4.115 — above
-#: the old 3.59-4.41 edge on two of four runs, edge moved with
-#: provenance — fuzzy 2.377-2.625 nudging the old 2.44 low edge
-#: down, and containment 1.678-1.947, whose third-run 1.947 moved
-#: the high edge and whose fourth run, 1.8, confirms the edge is
-#: not still growing).
-#: Machine-readable copy of SCALING.md's "Extended-heavy observed
-#: ranges"; ``tools/bench_trend.py`` grades against these.
-#: (r15: containment high edge 1.947 → 1.99 — the round-15 clean-
-#: stamps run, BENCH_LOCAL_r15, read 1.989 in its postheadline
-#: section with steal 0.28%/1.71% and a clean gate on the churned-
-#: afternoon box state that also moved the headline edge.)
-#: r17 RE-SEED (code era — the engine changed; the r10-r16 ranges are
-#: archived as EXTENDED_OBSERVED_RANGES_PRE_R17OPT_SEC). Seeded from
-#: the postheadline sections of the 2026-08-18 quiet-hunt cohort
-#: (evidence/r17/, all inside the documented steal episode, so both
-#: edges are PROVISIONAL): triangle 3.115-3.559, pagerank 3.274-4.133,
-#: fuzzy 1.512-1.932, containment 1.329-1.779 over 4 runs; edges =
-#: envelope ±~10%. Recorded-only section (non-gating) since r16.
-EXTENDED_OBSERVED_RANGES_SEC = {
-    "graph_triangle_summary": [2.80, 3.92],
-    "graph_pagerank": [2.95, 4.55],
-    "dedup_fuzzy_names": [1.35, 2.13],
-    "dedup_containment_pairs": [1.20, 1.96],
-}
-
-#: FRESH-order ranges for the r15+ primary extended section (r14
-#: verdict #4): the heavies measured in their OWN fresh JVM (run
-#: LAST — the child-before-headline variant measurably perturbed the
-#: headline anchor, see SCALING.md round-15 findings), so the numbers
-#: stop riding Spark's in-JVM accumulated self-load. Fresh-order reads HIGHER than the legacy
-#: after-headline envelope on most heavies: the legacy section ran
-#: in a fully-JIT-compiled JVM with the sf0.1 tables hot in page
-#: cache from the headline loop, while the child warms only at
-#: sf0.001 (min-of-3 amortizes but does not erase the cold costs).
-#: Calibrated 2026-08-16 from the SIX lowest-steal child windows
-#: during the round-15 host-contention incident (see
-#: SCALING.md#noise-band "Hypervisor steal"), in
-#: triangle/pagerank/fuzzy/containment order:
-#:   A (steal 0.05% cap / 0.27% dem)  4.517/5.498/2.890/1.987
-#:   B (0.32% cap)                    4.805/6.339/3.173/1.808
-#:   C (0.51% cap)                    4.981/6.119/3.257/2.304
-#:   D (0.35% / 1.97% — the committed BENCH_LOCAL_r15 child)
-#:                                    4.649/5.976/3.329/1.996
-#:   E (0.25% / 1.42%)                5.019/7.038/2.804/2.122
-#:   F (pre-stamp, lowest observed)   4.865/5.607/2.646/1.610
-#: Observed envelopes: triangle 4.517-5.019, pagerank 5.498-7.038,
-#: fuzzy 2.646-3.329, containment 1.610-2.304. Initial edges were
-#: the three-point envelope +/-10% (the r14 lesson: few-point
-#: envelopes underestimate the ~3-13% within-regime spread, and the
-#: calibration day's host was noisy even in its quiet windows);
-#: point E's clean-stamps pagerank 7.038 then moved that edge to
-#: 7.10. Re-pin from additional clean-steal runs as they accumulate.
-#: ROUND-16 quiet-day recalibration pass (r15 verdict #5): three
-#: clean-stamp children during the r16 host-degradation episode, in
-#: triangle/pagerank/fuzzy/containment order:
-#:   G (0.13% cap / 0.70% dem)   4.402/5.771/2.837/1.828 — in-band
-#:   H (0.01% / 0.06% — the cleanest child window ever stamped)
-#:                               4.042/4.751/2.233/1.638 — triangle/
-#:       pagerank/fuzzy BELOW the low edges: the truly-quiet box runs
-#:       faster than every noisy-day calibration point
-#:   I (0.28% / 1.53%)           4.568/5.942/3.122/1.969 — in-band
-#:   J (0.02% / 0.13% — the committed BENCH_LOCAL_r16 child)
-#:                               4.613/6.177/3.021/1.979 — in-band
-#: Verdict: HIGH edges confirmed over four clean children (none
-#: approached an edge);
-#: low edges left where they are — below_band is recorded-only
-#: maintenance, and H is a single point (the two-clean-points edge
-#: discipline applies downward too).
-#: r17 RE-SEED (code era — archived pre-r17 values in
-#: EXTENDED_FRESH_RANGES_PRE_R17OPT_SEC). Seeded from the two
-#: least-polluted fresh children of the 2026-08-18 cohort (attempts
-#: 1 and 8: triangle 3.777/3.80, pagerank 4.145/4.382, fuzzy
-#: 1.721/2.207, containment 1.34/1.81), edges = envelope ±~15% (the
-#: r14 few-point lesson). EXCLUDED episode children (child-window
-#: demand-steal 3.3-8.8%): triangle 6.17/7.18/11.98 — the same
-#: monotone-with-steal signature as the headline outliers. Both
-#: edges PROVISIONAL pending a quiet-box recalibration (top r18
-#: evidence task).
-#: (triangle high edge 4.40 -> 4.70 same night: the second hunt's
-#: cleanest run read 4.581 with its child window at 2.32% demand —
-#: barely over threshold, the best upper evidence the episode allowed;
-#: triangle is the cohort's most steal-sensitive heavy, spanning
-#: 3.78-11.98 across the ten runs in lockstep with the child steal.)
-EXTENDED_FRESH_RANGES_SEC = {
-    "graph_triangle_summary": [3.20, 4.70],
-    "graph_pagerank": [3.50, 5.05],
-    "dedup_fuzzy_names": [1.45, 2.55],
-    "dedup_containment_pairs": [1.15, 2.10],
-}
-
-
-# --- CODE-ERA dispatch (round 17, first optimization round) ---------------
-#
-# The bands above describe the box + data regime ON A GIVEN ENGINE.
-# Round 17 changed the engine itself (integer-cents money aggregation,
-# session-scoped table-handle cache, pinned expansion/window exchanges,
-# per-vertex PageRank decimal cast, rebalanced self-join/scan stages —
-# see OPTIMIZATION_r17.md), so r17+ artifacts grade against the
-# CURRENT-era constants while pre-r17 artifacts keep grading against
-# the engine they actually ran (cross-era point-to-band comparison is
-# the same mistake as the single-run/min-of-3 mixup BASELINE.md
-# documents — the r16 code cannot "regress" against a band the r17
-# code defined, and vice versa). The retired pre-optimization bands
-# are archived verbatim below with their full provenance left in the
-# comments above; ``tools/bench_trend.py`` dispatches on the
-# artifact's round number.
-FIRST_OPTIMIZED_ROUND = 17
-
-#: the r10-r16 engine's min-of-3 anchor band (provenance: the long
-#: comment block above ANCHOR_BAND_MIN_OF_3_SEC, which described this
-#: band until r17), including the r16 episode-widened 13.98 edge and
-#: its support/retirement state, frozen at retirement:
-#:   stable edge 12.53, support [12.861, 12.898, 13.062, 13.515,
-#:   13.975], episode subset [13.062, 13.975], retirement chain
-#:   [[11.885, "r16-recovery"], [11.325, "r16-recovery"],
-#:    [11.566, "r16-driver"]] (unmet at freeze).
-ANCHOR_BAND_PRE_R17OPT_SEC = [10.53, 13.98]
-
-#: the r10-r16 engine's extended ranges, frozen at the r17 rebuild
-#: (provenance in the comment blocks above the current-era dicts).
-EXTENDED_OBSERVED_RANGES_PRE_R17OPT_SEC = {
-    "graph_triangle_summary": [3.59, 5.10],
-    "graph_pagerank": [4.75, 6.18],
-    "dedup_fuzzy_names": [2.377, 2.92],
-    "dedup_containment_pairs": [1.47, 1.99],
-}
-EXTENDED_FRESH_RANGES_PRE_R17OPT_SEC = {
-    "graph_triangle_summary": [4.30, 5.50],
-    "graph_pagerank": [5.00, 7.10],
-    "dedup_fuzzy_names": [2.40, 3.60],
-    "dedup_containment_pairs": [1.45, 2.55],
-}
-
-
-def anchor_band_for_round(round_no):
-    """Era dispatch: the min-of-3 anchor band the given round's engine
-    ran under. ``None`` (unknown round) grades as current — a NEW
-    artifact must never sneak onto a retired band."""
-    if round_no is not None and round_no < FIRST_OPTIMIZED_ROUND:
-        return ANCHOR_BAND_PRE_R17OPT_SEC
-    return ANCHOR_BAND_MIN_OF_3_SEC
-
-
-def extended_ranges_for_round(round_no, fresh_order: bool):
-    """Era dispatch for the extended-heavy ranges (fresh-JVM primary
-    vs legacy after-headline secondary)."""
-    if round_no is not None and round_no < FIRST_OPTIMIZED_ROUND:
-        return (
-            EXTENDED_FRESH_RANGES_PRE_R17OPT_SEC
-            if fresh_order
-            else EXTENDED_OBSERVED_RANGES_PRE_R17OPT_SEC
-        )
-    return (
-        EXTENDED_FRESH_RANGES_SEC if fresh_order else EXTENDED_OBSERVED_RANGES_SEC
-    )
 
 
 def read_cpu_steal():
@@ -567,14 +93,11 @@ def read_cpu_steal():
 
 def steal_record(before, after):
     """Two views of the same hypervisor denial over a window, both
-    stamped: % of total CAPACITY (window x all cpus — conservative,
-    diluted by idle phases) and % of DEMAND (denied/(granted+denied))
-    — the barrier-relevant number: a run that only bursts wide for
-    part of its window can lose 10% of its demanded cycles while
-    capacity-steal reads under 2% (observed live in r15). Demand-
-    steal is self-masking-safe in the conservative direction: a guest
-    regression grows busy, LOWERING the percentage — a regression can
-    only become more visible, never excused."""
+    stamped as recorded context: % of total CAPACITY (window x all
+    cpus — diluted by idle phases) and % of DEMAND
+    (denied/(granted+denied)) — a run that only bursts wide for part
+    of its window can lose 10% of its demanded cycles while
+    capacity-steal reads under 2% (observed in r15)."""
     if before is None or after is None:
         return None
     ds = after[0] - before[0]

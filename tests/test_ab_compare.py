@@ -160,15 +160,6 @@ def test_steal_helpers_shared_and_engine_free():
     live = bc.read_cpu_steal()
     assert live is not None and len(live) == 3
     assert all(v >= 0 for v in live) and live[2] >= live[1] >= 0
-    # bench.py's aliases resolve to the same functions
-    import importlib.util
-    spec = importlib.util.spec_from_file_location(
-        "bench_for_steal_test", _TOOLS.parent / "bench.py"
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-    assert bench._read_cpu_steal is bc.read_cpu_steal
-    assert bench._steal_record is bc.steal_record
 
 
 def test_box_load_threshold_shared_with_bench():

@@ -235,7 +235,7 @@ def test_ab_gate_headline_list_is_engine_free_importable():
     engine-free measurement-constants module) so the tripwire never
     pays — or inherits a failure from — the full registry import just
     to know which queries are anchor-feeding; bench.py must re-export
-    the SAME object (single source of truth, like the band constants)."""
+    the SAME object (single source of truth)."""
     import bench
     from bench_constants import EXTENDED, HEADLINE
 

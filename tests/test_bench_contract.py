@@ -64,8 +64,32 @@ def _run(
 
 def test_bench_artifact_contract_clean_run(bench, capsys, monkeypatch, spark):
     art, compact = _run(bench, capsys, monkeypatch, ["topk_orders", "grep_docs"])
-    # the compact FINAL line carries exactly what the driver grades,
-    # copied (not recomputed) from the diagnostic record
+    # the compact FINAL line carries exactly this key set: what the
+    # driver grades plus fixed-size recorded context, nothing else
+    assert set(compact) == {
+        "metric",
+        "value",
+        "unit",
+        "queries",
+        "n_measured",
+        "n_expected",
+        "sf",
+        "runs_per_query",
+        "box_load_ok",
+        "load_1m_at_start",
+        "loadavg_final",
+        "box_load_threshold_1m",
+        "box_settled",
+        "gate_criterion",
+        "steal_pct",
+        "steal_pct_demand",
+        "steal_pct_headline",
+        "steal_pct_demand_headline",
+        "cpu_work_probe_sec",
+        "extended_queries",
+        "diagnostics",
+    }
+    # ... copied (not recomputed) from the diagnostic record
     for key in (
         "metric",
         "value",
@@ -79,8 +103,6 @@ def test_bench_artifact_contract_clean_run(bench, capsys, monkeypatch, spark):
         "box_settled",
         "gate_criterion",
         "extended_queries",
-        "extended_order",
-        "extended_queries_postheadline",
     ):
         assert compact[key] == art[key], key
     assert "preceding stdout line" in compact["diagnostics"]
@@ -91,7 +113,6 @@ def test_bench_artifact_contract_clean_run(bench, capsys, monkeypatch, spark):
         "protocol",
         "errors",
         "extended_load_1m_per_query",
-        "extended_postheadline_load_1m_per_query",
     ):
         assert absent not in compact
     assert art["metric"] == "headline_queries_total_sec"
@@ -143,18 +164,17 @@ def test_bench_artifact_contract_clean_run(bench, capsys, monkeypatch, spark):
     assert iw["settle_min_sec"] == bench.IDLE_SETTLE_MIN_SEC
     assert iw["threshold_5m"] == bench.BOX_LOAD_THRESHOLD_5M
     # hypervisor-steal stamp (r15): the window over the measured span,
-    # mirrored onto the compact line as a single percentage — the
-    # adjudication signal for host-side contention no loadavg sees
+    # mirrored onto the compact line as recorded context — host-side
+    # contention no loadavg sees
     st = art["cpu_steal"]
     assert st["steal_jiffies"] >= 0 and st["total_jiffies"] > 0
     assert st["busy_jiffies"] > 0  # the bench itself demanded cycles
     assert compact["steal_pct"] == st["steal_pct_of_capacity"]
     assert compact["steal_pct_demand"] == st["steal_pct_of_demand"]
     # HEADLINE-window steal stamp (ADVICE r15 medium): a second record
-    # closed right after the headline loop, so bench_trend adjudicates
-    # above-band headline readings on the window that actually timed
-    # them — its jiffy window must be a strict subset of the whole-span
-    # record, and the compact line must mirror both percentages
+    # closed right after the headline loop — its jiffy window must be a
+    # subset of the whole-span record, and the compact line must
+    # mirror both percentages
     hst = art["cpu_steal_headline"]
     assert hst["steal_jiffies"] >= 0 and hst["busy_jiffies"] > 0
     assert hst["total_jiffies"] <= st["total_jiffies"]
@@ -212,46 +232,25 @@ def test_bench_extended_section_measured_but_not_in_anchor(
     bench, capsys, monkeypatch, spark
 ):
     """r12 verdict #4: extended queries run on the same min-of-N
-    protocol but live outside the anchor — the total must be the
-    HEADLINE sum only, with the extended timing stamped separately.
-    Since r15 (r14 verdict #4) the PRIMARY extended numbers come from
-    a fresh-JVM child (this test runs the real subprocess) — run
-    AFTER the parent's sections, so the headline keeps its r10-r14
-    position (the before-headline variant measured harmful: it
-    re-created the just-finished-job drain the settle gate exists to
-    prevent) — with the legacy same-JVM after-headline order riding
-    along as ``extended_queries_postheadline``."""
+    protocol, in the same JVM after the headline, but live outside the
+    anchor — the total must be the HEADLINE sum only, with the
+    extended timing stamped separately."""
     art, compact = _run(
         bench, capsys, monkeypatch, ["topk_orders"], extended=["grep_docs"]
     )
-    # primary = fresh-order, stamped with its era marker
-    assert art["extended_order"] == "fresh_jvm_after_headline"
-    # the child stamps its own fixed-work host-speed probe (r16)
-    assert 0 < art["extended_fresh_cpu_work_probe_sec"] < 60
     assert set(art["extended_queries"]) == {"grep_docs"}
     assert art["extended_queries"]["grep_docs"] > 0
     assert "extended_errors" not in art
-    # secondary = the legacy after-headline order, kept as a trend
-    assert set(art["extended_queries_postheadline"]) == {"grep_docs"}
-    assert art["extended_queries_postheadline"]["grep_docs"] > 0
-    assert "extended_postheadline_errors" not in art
-    # r13 verdict #3: per-query [before, after] load samples for BOTH
-    # extended sections (r13 measured then DISCARDED them, leaving
+    # r13 verdict #3: per-query [before, after] load samples for the
+    # extended section (r13 measured then DISCARDED them, leaving
     # the pagerank 1.34x-vs-idle point unexplainable)
     assert set(art["extended_load_1m_per_query"]) == {"grep_docs"}
-    assert set(art["extended_postheadline_load_1m_per_query"]) == {"grep_docs"}
     for pair in art["extended_load_1m_per_query"].values():
         assert len(pair) == 2 and all(v >= 0 for v in pair)
-    # the compact final line carries both orders' timings (they're
-    # the sf0.1 trend the verdict reads) but not the load stamps
+    # the compact final line carries the extended timings (the sf0.1
+    # trend) but not the load stamps
     assert compact["extended_queries"] == art["extended_queries"]
-    assert compact["extended_order"] == art["extended_order"]
-    assert (
-        compact["extended_queries_postheadline"]
-        == art["extended_queries_postheadline"]
-    )
     assert "extended_load_1m_per_query" not in compact
-    assert "extended_postheadline_load_1m_per_query" not in compact
     # anchor total is headline-only
     assert art["value"] == pytest.approx(
         round(sum(art["queries"].values()), 3), abs=1e-6
@@ -273,41 +272,11 @@ def test_bench_extended_failure_never_nulls_anchor_total(
     )
     assert art["value"] is not None and art["value"] > 0
     assert "errors" not in art
-    # the fresh-JVM child records the failure per-name (or, if the
-    # child itself died, under the synthetic _fresh_jvm key — either
-    # way the anchor total survives)
     assert "KeyError" in art["extended_errors"]["no_such_query"]
     assert art["extended_queries"] == {}
-    # the legacy after-headline section is failure-isolated the same way
-    assert "KeyError" in art["extended_postheadline_errors"]["no_such_query"]
-    assert art["extended_queries_postheadline"] == {}
     assert compact["value"] is not None
     assert compact["extended_failed"] == ["no_such_query"]
-    assert compact["extended_postheadline_failed"] == ["no_such_query"]
     assert "failed" not in compact
-    json.dumps(art, allow_nan=False)
-
-
-def test_bench_fresh_child_crash_is_isolated(bench, capsys, monkeypatch, spark):
-    """A crashed/unparseable fresh-JVM child must never null the
-    anchor total or kill the artifact: it records a synthetic
-    ``_fresh_jvm`` error and the run continues (same round-2
-    failure-isolation lesson as per-query errors)."""
-    monkeypatch.setattr(
-        bench, "_extended_fresh_subprocess",
-        lambda names, reps: (
-            {}, {"_fresh_jvm": "ValueError: no JSON line"}, {}, None, None
-        ),
-    )
-    art, compact = _run(
-        bench, capsys, monkeypatch, ["topk_orders"], extended=["grep_docs"]
-    )
-    assert art["value"] is not None and art["value"] > 0
-    assert art["extended_queries"] == {}
-    assert art["extended_errors"] == {"_fresh_jvm": "ValueError: no JSON line"}
-    # the legacy in-JVM section still measured
-    assert art["extended_queries_postheadline"]["grep_docs"] > 0
-    assert compact["extended_failed"] == ["_fresh_jvm"]
     json.dumps(art, allow_nan=False)
 
 
@@ -504,107 +473,3 @@ def test_compact_record_overflow_raises_even_under_optimize(bench, monkeypatch):
         bench.compact_record(diag)
     src = (_REPO / "bench.py").read_text()
     assert "raise RuntimeError" in src
-
-
-def test_anchor_band_edge_move_rule():
-    """r15 verdict #1 codified: an ANCHOR_BAND edge may only move when
-    >= ANCHOR_EDGE_MIN_CLEAN_POINTS clean-stamp runs land in the new
-    region. Pins: (a) the high edge equals the last stable edge unless
-    clean support points exist above it; (b) every support point lies
-    above the stable edge and at-or-under the current high edge within
-    rounding; (c) the PROVISIONAL flag is exactly the under-supported
-    state — an edge ratcheted on a single near-threshold point must
-    visibly say so in the constant (ADVICE r15: the r15 moves each
-    rested on one point from the host-contention incident)."""
-    from bench_constants import (
-        ANCHOR_BAND_MIN_OF_3_SEC,
-        ANCHOR_EDGE_MIN_CLEAN_POINTS,
-        ANCHOR_HIGH_EDGE_PROVISIONAL,
-        ANCHOR_HIGH_EDGE_STABLE_SEC,
-        ANCHOR_HIGH_EDGE_SUPPORT_SEC,
-    )
-
-    hi = ANCHOR_BAND_MIN_OF_3_SEC[1]
-    assert ANCHOR_EDGE_MIN_CLEAN_POINTS >= 2
-    assert ANCHOR_HIGH_EDGE_STABLE_SEC <= hi
-    if ANCHOR_HIGH_EDGE_SUPPORT_SEC:
-        top = max(ANCHOR_HIGH_EDGE_SUPPORT_SEC)
-        # the edge is the top support point, rounded up to 2 decimals
-        # (never more than 1% of headroom beyond the evidence)
-        assert hi >= top and hi <= round(top * 1.01, 2)
-        for p in ANCHOR_HIGH_EDGE_SUPPORT_SEC:
-            assert ANCHOR_HIGH_EDGE_STABLE_SEC < p <= hi
-    else:
-        # no clean points beyond the stable edge: the band must sit AT
-        # the stable edge (a retracted move leaves no residue)
-        assert hi == ANCHOR_HIGH_EDGE_STABLE_SEC
-    assert ANCHOR_HIGH_EDGE_PROVISIONAL == (
-        len(ANCHOR_HIGH_EDGE_SUPPORT_SEC) < ANCHOR_EDGE_MIN_CLEAN_POINTS
-    )
-
-
-def test_anchor_band_edge_retirement_rule():
-    """r16 verdict #2 codified: the contraction twin of the edge-move
-    rule. Episode-collected support points retire to provenance-only
-    once >= ANCHOR_EDGE_RETIRE_MIN_CLEAN_POINTS consecutive clean-stamp
-    runs across >= ANCHOR_EDGE_RETIRE_MIN_SESSIONS sessions all land at
-    or below the stable edge. Pins: (a) the rule function on synthetic
-    chains, both directions; (b) live-constants consistency — while
-    the rule is unmet the episode points must still be IN the support
-    list (the band widening stands), and once met they must be OUT
-    (the high edge recomputes from the remaining support); (c) every
-    committed observation qualifies (at or below the stable edge)."""
-    from bench_constants import (
-        ANCHOR_BAND_MIN_OF_3_SEC,
-        ANCHOR_EDGE_RETIRE_MIN_CLEAN_POINTS,
-        ANCHOR_EDGE_RETIRE_MIN_SESSIONS,
-        ANCHOR_EDGE_RETIRE_OBSERVATIONS,
-        ANCHOR_EDGE_RETIREMENT_MET,
-        ANCHOR_HIGH_EDGE_EPISODE_SUPPORT_SEC,
-        ANCHOR_HIGH_EDGE_STABLE_SEC,
-        ANCHOR_HIGH_EDGE_SUPPORT_SEC,
-        anchor_edge_retirement_met,
-    )
-
-    # (a) synthetic chains — retire direction
-    chain = [[11.9, "s1"], [11.3, "s1"], [11.6, "s2"], [12.1, "s3"]]
-    assert anchor_edge_retirement_met(
-        chain, min_points=4, min_sessions=2, stable_edge=12.53) is True
-    # too few points
-    assert anchor_edge_retirement_met(
-        chain[:3], min_points=4, min_sessions=2, stable_edge=12.53) is False
-    # one session only
-    one = [[v, "s1"] for v, _ in chain]
-    assert anchor_edge_retirement_met(
-        one, min_points=4, min_sessions=2, stable_edge=12.53) is False
-    # a point above the stable edge disqualifies the whole chain
-    hot = chain[:3] + [[12.61, "s3"]]
-    assert anchor_edge_retirement_met(
-        hot, min_points=4, min_sessions=2, stable_edge=12.53) is False
-
-    # (b) live-constants consistency
-    assert ANCHOR_EDGE_RETIRE_MIN_CLEAN_POINTS >= 2
-    assert ANCHOR_EDGE_RETIRE_MIN_SESSIONS >= 2
-    support = set(ANCHOR_HIGH_EDGE_SUPPORT_SEC)
-    episode = set(ANCHOR_HIGH_EDGE_EPISODE_SUPPORT_SEC)
-    if ANCHOR_EDGE_RETIREMENT_MET:
-        # retired: episode points are provenance-only, the edge covers
-        # only the remaining support (test_anchor_band_edge_move_rule
-        # enforces the exact edge-vs-support arithmetic)
-        assert not (episode & support)
-    else:
-        # retained: a widening backed by episode points must keep them
-        # visibly in the support list — no silent half-retirement
-        assert episode <= support
-    # episode points sit above the stable edge either way (they were
-    # collected as support for a widened edge)
-    for p in ANCHOR_HIGH_EDGE_EPISODE_SUPPORT_SEC:
-        assert p > ANCHOR_HIGH_EDGE_STABLE_SEC
-
-    # (c) every committed observation qualifies
-    for v, session in ANCHOR_EDGE_RETIRE_OBSERVATIONS:
-        assert v <= ANCHOR_HIGH_EDGE_STABLE_SEC, (v, session)
-    # the live boolean is the function of the live inputs
-    assert ANCHOR_EDGE_RETIREMENT_MET == anchor_edge_retirement_met()
-    # and the band's high edge must cover the stable edge regardless
-    assert ANCHOR_BAND_MIN_OF_3_SEC[1] >= ANCHOR_HIGH_EDGE_STABLE_SEC

@@ -29,31 +29,24 @@ EVLOG_DIR = "/tmp/spark-events-profile"
 
 
 def get_profile_spark():
-    """get_spark()'s exact conf + event logging (profile-only)."""
+    """``session.get_spark()`` plus event logging. ``get_spark`` takes
+    no extra confs, so the event-log confs go in through
+    ``PYSPARK_SUBMIT_ARGS``, which pyspark reads when it launches the
+    JVM: call this before any session exists in the process."""
     os.makedirs(EVLOG_DIR, exist_ok=True)
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-    return (
-        SparkSession.builder.appName("mrs-profile")
-        .master(f"local[{cpus}]")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g"))
-        .config("spark.sql.shuffle.partitions", shuffle_parts)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", f"file:{EVLOG_DIR}")
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
+    confs = {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": f"file:{EVLOG_DIR}",
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    }
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        [f"--conf {k}={v}" for k, v in confs.items()]
+        + [os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")]
     )
+    from map_reduce_showcase_spark.session import get_spark
+
+    return get_spark(app_name="mrs-profile")
 
 
 def _open_event_log(app_id: str):
@@ -112,7 +105,7 @@ def parse_event_log(app_id: str) -> dict:
                         "spill_mb": 0.0,
                     },
                 )
-                st["name"] = si.get("Name", "")
+                st["name"] = si.get("Stage Name", "")
                 st["n_tasks"] = si.get("Number of Tasks", 0)
                 st["wall_ms"] = si.get("Completion Time", 0) - si.get(
                     "Submission Time", 0
